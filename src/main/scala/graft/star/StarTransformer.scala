@@ -2,10 +2,12 @@ package graft.star
 
 import java.sql.{Date, Timestamp}
 
+import scala.jdk.CollectionConverters._
+
 import graft.qcol
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Star-schema bundle: one fact table + named dimension tables
   * (`R/star_transformer.R:42-45`). */
@@ -21,47 +23,74 @@ final case class StarSchema(fact: DataFrame, dims: Map[String, DataFrame])
   *    are reproducible and oracle-comparable.
   *
   * Scale notes: each dimension is tiny by the classifier's contract
-  * (<50 distinct values — `R/schema_analyzer.R:34`), so the surrogate-key
-  * window over the post-distinct values is a few rows on one partition, and
-  * every fact-to-dim join is a broadcast-hash join: the fact table is never
+  * (<50 distinct values — `R/schema_analyzer.R:34`), so its keys are
+  * assigned on the driver over the collected distinct values, and every
+  * fact-to-dim join is a broadcast-hash join: the fact table is never
   * shuffled. For generic (unbounded) dims use [[buildDimScalable]], which
-  * assigns keys without a single-partition sort.
+  * assigns keys without collecting the values.
   */
 object StarTransformer {
 
   /** Dimension build (`R/star_transformer.R:51-68`): distinct non-null
-    * values, sorted, keyed 1..n by row_number, plus dimension metadata. */
-  def buildDim(df: DataFrame, valueCol: String, loadDate: Date): DataFrame = {
-    val keyCol = s"${valueCol}_key"
-    df.select(qcol(valueCol)).filter(qcol(valueCol).isNotNull)
-      .distinct()
-      .withColumn(keyCol, row_number().over(Window.orderBy(qcol(valueCol))))
-      .select(qcol(keyCol), qcol(valueCol),
-        lit(loadDate).as("created_date"), lit(true).as("is_active"))
-  }
+    * values, sorted, keyed 1..n, plus dimension metadata. */
+  def buildDim(df: DataFrame, valueCol: String, loadDate: Date): DataFrame =
+    buildDims(df, Seq(valueCol), loadDate)(valueCol)
+
+  /** [[buildDim]] for several columns at once, in ONE aggregate over `df`
+    * (the sorted distinct values of every column). Each dim is then keyed
+    * on the driver and returned as a local table: dims are tiny by the
+    * classifier's contract, so a dim costs no job of its own, and a
+    * broadcast of it ships rows the driver already holds. Key, date and
+    * flag are declared non-null, the value nullable: the schema a
+    * `dim_<col>.parquet` file carries. */
+  def buildDims(df: DataFrame, valueCols: Seq[String], loadDate: Date)
+      : Map[String, DataFrame] =
+    valueCols.zip(sortedValues(df, valueCols)).map { case (c, values) =>
+      c -> df.sparkSession.createDataFrame(
+        values.zipWithIndex.map { case (v, k) =>
+          Row(k + 1, v, loadDate, true) }.asJava,
+        StructType(Seq(
+          StructField(s"${c}_key", IntegerType, nullable = false),
+          StructField(c, df.schema(c).dataType, nullable = true),
+          StructField("created_date", DateType, nullable = false),
+          StructField("is_active", BooleanType, nullable = false))))
+    }.toMap
+
+  /** The distinct non-null values of each column in Spark's sort order
+    * (`array_sort`, so keys numbered over them match a `row_number` over
+    * the sorted values), from one aggregate. */
+  private def sortedValues(df: DataFrame, cols: Seq[String])
+      : Seq[Seq[Any]] =
+    if (cols.isEmpty) Nil
+    else {
+      val sets = cols.map(c => array_sort(collect_set(qcol(c))))
+      val row = df.agg(sets.head, sets.tail: _*).head()
+      cols.indices.map(row.getSeq[Any])
+    }
 
   /** Incremental dimension merge: values already in `existing` KEEP their
     * surrogate keys (appended fact rows stay consistent with historical
     * ones); genuinely new values get fresh keys above the current max, in
     * value order. This is what the reference's per-batch keying should have
-    * been (SURVEY.md §8 Q3). */
+    * been (SURVEY.md §8 Q3). Driver-local like [[buildDims]]: the existing
+    * dim is collected (it is small by the same contract) and keeps its
+    * schema. */
   def mergeDim(existing: DataFrame, df: DataFrame, valueCol: String,
       loadDate: Date): DataFrame = {
     val keyCol = s"${valueCol}_key"
-    val maxKey = existing.agg(max(qcol(keyCol))).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.get(0).asInstanceOf[Number].longValue()
-    }
-    val newVals = df.select(qcol(valueCol)).filter(qcol(valueCol).isNotNull)
-      .distinct()
-      .join(existing.select(qcol(valueCol)), Seq(valueCol), "left_anti")
-    val keyed = newVals
-      .withColumn(keyCol,
-        (row_number().over(Window.orderBy(qcol(valueCol))) + lit(maxKey))
-          .cast(existing.schema(keyCol).dataType))
-      .select(qcol(keyCol), qcol(valueCol),
-        lit(loadDate).as("created_date"), lit(true).as("is_active"))
-    existing.select(keyed.columns.map(qcol): _*).unionByName(keyed)
+    val cols = Seq(keyCol, valueCol, "created_date", "is_active")
+    val old = existing.select(cols.map(qcol): _*).collect().toSeq
+    val known = old.map(_.get(1)).toSet
+    val maxKey = old.flatMap(r => Option(r.get(0)))
+      .map(_.asInstanceOf[Number].longValue()).maxOption.getOrElse(0L)
+    val intKeys = existing.schema(keyCol).dataType == IntegerType
+    val added = sortedValues(df, Seq(valueCol)).head.filterNot(known)
+      .zipWithIndex.map { case (v, i) =>
+        val k = maxKey + i + 1
+        Row(if (intKeys) k.toInt else k, v, loadDate, true)
+      }
+    existing.sparkSession.createDataFrame((old ++ added).asJava,
+      StructType(cols.map(existing.schema(_))))
   }
 
   /** Key assignment for dims too large for one partition: zipWithIndex over
@@ -152,22 +181,47 @@ object StarTransformer {
           count(qcol(m)).as(s"${m}_count"))).tail: _*)
 
   /** Integrity checks (`R/star_transformer.R:168-199`): non-empty fact/dims,
-    * unique+dense surrogate keys, and (beyond the reference) FK integrity —
-    * every fact key must resolve. Returns human-readable violations. */
+    * unique surrogate keys (a null key counts as one key value), and
+    * (beyond the reference) FK integrity — every non-null fact key must
+    * equal a non-null key of its dim. Returns human-readable violations:
+    * the fact first, then per dim (in `star.dims` order) empty, duplicate,
+    * unresolved.
+    *
+    * Three jobs whatever the dim count: one collect of every dim's keys
+    * (one row per dim row — dims are small by the classifier's contract),
+    * then one aggregate over the fact that counts its rows and,
+    * per dim, the non-null keys outside that dim's key set. Keys compare
+    * by their string form, exact for the integral keys dims carry; the key
+    * sets ride the plan as array literals, so the generated code is the
+    * same whatever the keys are. */
   def validateIntegrity(star: StarSchema): Seq[String] = {
+    val dims = star.dims.toSeq
+    // one RDD union of per-dim plans, not a Dataset union: each dim keeps
+    // its own plan, so dims of one shape share one generated class
+    val keysByDim: Map[String, Seq[String]] =
+      if (dims.isEmpty) Map.empty
+      else star.fact.sparkSession.sparkContext.union(dims.map {
+        case (name, dim) =>
+          dim.select(qcol(s"${name}_key").cast("string")).rdd
+            .map(r => name -> r.getString(0))
+      }).collect().toSeq.groupMap(_._1)(_._2)
+    val checks = count(lit(1)) +: dims.map { case (name, _) =>
+      val key = qcol(s"${name}_key")
+      val known = lit(keysByDim.getOrElse(name, Nil).filter(_ != null).toArray)
+      count(when(key.isNotNull && !array_contains(known, key.cast("string")),
+        lit(1)))
+    }
+    val counts = star.fact.agg(checks.head, checks.tail: _*).head()
     val violations = Seq.newBuilder[String]
-    if (star.fact.isEmpty) violations += "fact table is empty"
-    star.dims.foreach { case (name, dim) =>
-      val keyCol = s"${name}_key"
-      val n = dim.count()
-      if (n == 0) violations += s"dimension $name is empty"
-      val distinctKeys = dim.select(qcol(keyCol)).distinct().count()
-      if (distinctKeys != n)
+    if (counts.getLong(0) == 0) violations += "fact table is empty"
+    dims.zipWithIndex.foreach { case ((name, _), i) =>
+      val keys = keysByDim.getOrElse(name, Nil)
+      if (keys.isEmpty) violations += s"dimension $name is empty"
+      if (keys.distinct.size != keys.size)
         violations += s"dimension $name has duplicate surrogate keys"
-      val unresolved = star.fact.filter(qcol(keyCol).isNotNull)
-        .join(dim, Seq(keyCol), "left_anti").count()
+      val unresolved = counts.getLong(i + 1)
       if (unresolved > 0)
-        violations += s"$unresolved fact rows have unresolved $keyCol"
+        violations += s"$unresolved fact rows have unresolved ${name}_key"
     }
     violations.result()
   }

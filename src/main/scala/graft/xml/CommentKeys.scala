@@ -3,6 +3,7 @@ package graft.xml
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -119,18 +120,40 @@ object CommentKeys {
     }.toDF("bk_file_path", "business_key_name", "business_key_value")
   }
 
-  /** Attaches business-key columns to parsed rows (which must carry
-    * `source_file_path` lineage). Adds the two generic columns plus one
-    * constant column per distinct key name (`COMMENT_AS_DIMENSION`
-    * behavior). The keys table is one row per file — broadcast. */
-  def attach(df: DataFrame, keys: DataFrame): DataFrame = {
-    val joined = df.join(broadcast(keys),
-      df("source_file_path") === keys("bk_file_path"), "left")
+  /** A listed file's path in the form a file scan reports it through
+    * `input_file_name()`. The listing gives `file:/tmp/a b.xml`; the scan
+    * of that file reports `file:///tmp/a%20b.xml`: its file index qualifies
+    * the bare path with the filesystem's URI (an empty authority on the
+    * local filesystem) and [[SparkPath]] URL-encodes it. The same two
+    * steps are taken here, so a listed path and a scanned row's lineage
+    * meet in one form. */
+  def scanPath(file: String, conf: Configuration): String = {
+    val p = new Path(file)
+    val fs = p.getFileSystem(conf)
+    SparkPath.fromPath(Path.getPathWithoutSchemeAndAuthority(p)
+      .makeQualified(fs.getUri, fs.getWorkingDirectory)).urlEncoded
+  }
+
+  /** Attaches business-key columns to parsed rows, which must carry
+    * `source_file_path` lineage from `input_file_name()`. `keys` are
+    * `(listed file, key name, key value)`, one per keyed file, as the
+    * fused validation pass or [[scan]] found them; their paths are put in
+    * the scan's form ([[scanPath]]) before the join. Adds the two generic
+    * columns plus one constant column per distinct key name
+    * (`COMMENT_AS_DIMENSION` behavior). The keys are driver-side already
+    * (one row per file), so the key names cost no job; the keys table is
+    * broadcast. */
+  def attach(df: DataFrame, keys: Seq[(String, String, String)])
+      : DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keyDf = keys.map { case (f, n, v) => (scanPath(f, conf), n, v) }
+      .toDF("bk_file_path", "business_key_name", "business_key_value")
+    val joined = df.join(broadcast(keyDf),
+      df("source_file_path") === keyDf("bk_file_path"), "left")
       .drop("bk_file_path")
-    // dynamic per-key-name columns; key names are few (driver collect OK)
-    val names = keys.select("business_key_name").distinct()
-      .collect().map(_.getString(0)).sorted
-    names.foldLeft(joined) { (acc, n) =>
+    keys.map(_._2).distinct.sorted.foldLeft(joined) { (acc, n) =>
       acc.withColumn(n,
         when(col("business_key_name") === n, col("business_key_value")))
     }

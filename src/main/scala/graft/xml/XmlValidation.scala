@@ -9,14 +9,14 @@ import javax.xml.validation.SchemaFactory
 import scala.collection.mutable
 import scala.io.Source
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.xml.sax.{ErrorHandler, InputSource, SAXParseException}
 
 /** File-level XML validation (`R/schema_validator.R`, SURVEY.md §2.1
   * S7-S11): XSD validation, DTD validation (external or internal DOCTYPE),
   * auto-detection (internal DTD -> XSD -> DTD -> none), the 5-location
-  * schema-file search, and distributed batch validation with a summary.
+  * schema-file search, and distributed batch validation.
   *
   * Three-valued verdict like the reference: Some(true) valid, Some(false)
   * invalid, None = no schema found (file proceeds unvalidated). A
@@ -38,11 +38,12 @@ object XmlValidation {
       schemaUsed: Option[String])
 
   /** File paths may arrive Hadoop-qualified (`file:/tmp/x.xml`); resolve to
-    * a local File either way. (Remote filesystems would stream through the
-    * Hadoop FS API instead — local-file validation is the reference's
-    * scope.) */
+    * a local File either way. A Hadoop path string is not a URI (a space
+    * or a quote in a file name stays raw), so it is parsed as a Hadoop
+    * Path. (Remote filesystems would stream through the Hadoop FS API
+    * instead — local-file validation is the reference's scope.) */
   private def localFile(path: String): File =
-    if (path.startsWith("file:")) new File(new java.net.URI(path))
+    if (path.startsWith("file:")) new File(new Path(path).toUri.getPath)
     else new File(path)
 
   private def collectingHandler(errs: mutable.Buffer[String]): ErrorHandler =
@@ -241,14 +242,5 @@ object XmlValidation {
     }.toDF("file", "verdict", "errors", "schema_used",
       "business_key_name", "business_key_value", "declared_encoding",
       "row_tag")
-  }
-
-  /** Verdict counts + percentage (`R/schema_validator.R:201-204`). */
-  def summarize(verdicts: DataFrame): DataFrame = {
-    val total = verdicts.count()
-    verdicts.groupBy(col("verdict"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("pct", col("n").cast("double") / total)
-      .orderBy(col("verdict"))
   }
 }

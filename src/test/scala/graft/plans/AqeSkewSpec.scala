@@ -16,8 +16,8 @@ class AqeSkewSpec extends SparkSpec {
 
   test("a hot key's partition is split (skew=true) and the result is exact") {
     val keys = Map(
-      // pinned ON: the shared session may have AQE gated off by
-      // Fns.tuneForScale (tiny testdata) — this spec tests AQE itself
+      // pinned ON: this spec tests AQE itself, whatever the shared
+      // session's setting
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.shuffle.partitions" -> "16",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",

@@ -60,8 +60,8 @@ class SkewedAsOfSpec extends SparkSpec {
   }
 
   test("AQE manages (coalesces) the exchanges feeding the custom exec") {
-    // pinned ON: the shared session may have AQE gated off by
-    // Fns.tuneForScale (tiny testdata) — this test asserts AQE behavior
+    // pinned ON: this test asserts AQE behavior, whatever the shared
+    // session's setting
     val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try {

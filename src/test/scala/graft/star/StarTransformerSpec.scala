@@ -99,6 +99,63 @@ class StarTransformerSpec extends SparkSpec {
     val fact = Seq((1, 1)).toDF("record_id", "category_key")
     val v = StarTransformer.validateIntegrity(
       StarSchema(fact, Map("category" -> badDim)))
-    assert(v.exists(_.contains("duplicate surrogate keys")))
+    assert(v == Seq("dimension category has duplicate surrogate keys"))
+  }
+
+  // Verdicts pinned case by case: each star below is valid except for the
+  // one defect it names, so the exact violation list is the contract.
+  private def dimOf(keys: Option[Int]*) =
+    keys.zipWithIndex.map { case (k, i) => (k, s"v$i") }
+      .toDF("category_key", "category")
+  private def factOf(keys: Option[Int]*) =
+    keys.zipWithIndex.map { case (k, i) => (i.toString, k) }
+      .toDF("record_id", "category_key")
+  private def verdicts(fact: org.apache.spark.sql.DataFrame,
+      dim: org.apache.spark.sql.DataFrame): Seq[String] =
+    StarTransformer.validateIntegrity(
+      StarSchema(fact, Map("category" -> dim)))
+
+  test("integrity verdicts: a valid star has none") {
+    assert(verdicts(factOf(Some(1), Some(2), Some(1)),
+      dimOf(Some(1), Some(2))).isEmpty)
+  }
+
+  test("integrity verdicts: an empty dim, whose keys then cannot resolve") {
+    assert(verdicts(factOf(Some(1), None), dimOf()) == Seq(
+      "dimension category is empty",
+      "1 fact rows have unresolved category_key"))
+  }
+
+  test("integrity verdicts: null keys count as one key value, never match") {
+    // one null key among distinct keys is not a duplicate; a null fact key
+    // is not unresolved, and a null dim key resolves nothing
+    assert(verdicts(factOf(Some(1), None), dimOf(None, Some(1))).isEmpty)
+    // two null keys are a duplicate
+    assert(verdicts(factOf(Some(1)), dimOf(None, None, Some(1))) ==
+      Seq("dimension category has duplicate surrogate keys"))
+  }
+
+  test("integrity verdicts: a fact key missing from its dim") {
+    assert(verdicts(factOf(Some(1), Some(3), Some(3), Some(4)),
+      dimOf(Some(1), Some(2))) ==
+      Seq("3 fact rows have unresolved category_key"))
+  }
+
+  test("integrity verdicts: an empty fact") {
+    assert(verdicts(factOf(), dimOf(Some(1))) ==
+      Seq("fact table is empty"))
+  }
+
+  test("integrity verdicts: every check on every dim, in dim order") {
+    val star = StarSchema(factOf(),
+      Map("category" -> dimOf(), "region" -> Seq((1, "a"), (1, "b"))
+        .toDF("region_key", "region")))
+    val fact = Seq(("1", Option(7), Option(2)))
+      .toDF("record_id", "category_key", "region_key")
+    assert(StarTransformer.validateIntegrity(star.copy(fact = fact)) == Seq(
+      "dimension category is empty",
+      "1 fact rows have unresolved category_key",
+      "dimension region has duplicate surrogate keys",
+      "1 fact rows have unresolved region_key"))
   }
 }

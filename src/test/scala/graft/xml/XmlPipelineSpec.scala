@@ -108,6 +108,20 @@ class XmlPipelineSpec extends SparkSpec {
     assert(CommentKeys.extractFromContent("<!-- not a key -->") == None)
     assert(CommentKeys.extractFromContent("<!--  Zone:East  -->") ==
       Some(("Zone", "East")))
+    // attached to the parsed rows by their scanned lineage path, whose
+    // form (file:///…) differs from the listing's (file:/…)
+    val rows = XmlIngest.readFiles(spark,
+      files.filterNot(_.endsWith("broken.xml")), "record")
+      .withColumn("source_file_path", input_file_name())
+    val attached = CommentKeys.attach(rows,
+      got.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))))
+      .select(element_at(split(col("source_file_path"), "/"), -1),
+        col("_id"), col("Division"), col("business_key_value"))
+      .as[(String, String, String, String)].collect().toSet
+    assert(attached == Set(
+      ("catalog1.xml", "1", "North", "North"),
+      ("catalog1.xml", "2", "North", "North"),
+      ("catalog2.xml", "3", null, null)))
   }
 
   test("validation: malformed file is flagged, others pass") {
@@ -602,9 +616,17 @@ class XmlPipelineSpec extends SparkSpec {
     // lineage + injected run id
     assert(fact.select("batch_id").distinct().as[Long].head() == 7L)
     assert(fact.select("source_file_name").distinct().count() == 2)
-    // business-key column attached
-    val dataCols = fact.columns.toSet
-    assert(dataCols.contains("record_count"))
+    // business-key column attached: catalog1.xml's key reaches its two
+    // rows, catalog2.xml has none (3 rows, one distinct value, a third
+    // null); too few rows for a dimension, so the profile shows it
+    val division = spark.read.option("header", "true")
+      .csv(s"$out/schema_documentation.csv")
+      .filter(col("col_name") === "Division").collect()
+    assert(division.length == 1)
+    assert(division.head.getAs[String]("n_rows") == "3")
+    assert(math.abs(division.head.getAs[String]("null_ratio").toDouble -
+      1.0 / 3) < 1e-9)
+    assert(division.head.getAs[String]("unique_count") == "1")
     // manifest written with the declared columns
     val manifest = spark.read.option("header", "true")
       .csv(s"$out/processing_manifest.csv").head()
@@ -684,7 +706,8 @@ class XmlPipelineSpec extends SparkSpec {
     tagged.unpersist()
   }
 
-  test("fact write carries a zero-extra-pass observed data contract") {
+  /** Spark jobs started while `f` runs. */
+  private def countJobs(f: => Unit): Int = {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
@@ -704,12 +727,12 @@ class XmlPipelineSpec extends SparkSpec {
       }
       cur
     }
-    def countJobs(f: => Unit): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      try { quiesce(); jobCount.set(0); f; quiesce() }
-      finally spark.sparkContext.removeSparkListener(listener)
-    }
+    spark.sparkContext.addSparkListener(listener)
+    try { quiesce(); jobCount.set(0); f; quiesce() }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 
+  test("fact write carries a zero-extra-pass observed data contract") {
     def runOnce(contract: Option[Seq[graft.profile.Expectations.Expectation]])
         : XmlPipeline.PipelineReport = {
       val (in, out, schemas) = mkPipelineDirs()
@@ -745,5 +768,85 @@ class XmlPipelineSpec extends SparkSpec {
       .csv(s"$out2/fact_contract.csv")
     assert(csv.count() >= 2) // not_null + row_count (+ measures)
     assert(csv.filter(col("passed") === "false").isEmpty)
+  }
+
+  test("a run of the spec corpus stays under its Spark job ceiling") {
+    def once(): Unit = {
+      val (in, out, schemas) = mkPipelineDirs()
+      XmlPipeline.process(spark, in.toString, out.toString, schemas.toString,
+        runId = 13L, loadTs = ts)
+    }
+    once() // warmup: first-run-only costs
+    val jobs = countJobs(once())
+    // 13 measured (the corpus has no dims): verdicts and profile rows are
+    // collected once, the reports are written from the driver, and the
+    // integrity check is 3 jobs
+    assert(jobs <= 15, s"$jobs Spark jobs for one run of the spec corpus")
+  }
+
+  test("driver-written reports read back as Spark's CSV sink wrote them") {
+    // the helper against Spark's own writer, on values that need quoting
+    val rows = Seq(
+      ("plain", 1L, 0.5, true),
+      ("a,\"b\" c", 2L, 1.0e-7, false),
+      ("  padded  ", 3L, Double.NaN, true),
+      ("", 4L, -0.0, false),
+      (null, 5L, 1.0 / 3, true))
+    val cols = Seq("s", "n", "d", "b")
+    val viaSpark = Files.createTempDirectory("graft_csv_spark").resolve("r")
+    val viaDriver = Files.createTempDirectory("graft_csv_driver").resolve("r")
+    rows.toDF(cols: _*).coalesce(1).write.option("header", "true")
+      .csv(viaSpark.toString)
+    graft.io.Reports.writeCsv(spark.sparkContext.hadoopConfiguration,
+      viaDriver.toString, cols,
+      rows.map { case (a, b, c, d) => Seq(a, b, c, d) })
+    def back(p: Path) = spark.read.option("header", "true")
+      .csv(p.toString).collect().map(_.toSeq).toSeq
+    assert(back(viaDriver) == back(viaSpark))
+    assert(back(viaDriver)(1).head == "a,\"b\" c")
+
+    // the pipeline's reports, over files whose names need quoting, and
+    // the manifest and ledger appending across runs
+    val in = Files.createTempDirectory("graft_rep_in")
+    val out = Files.createTempDirectory("graft_rep_out")
+    val schemas = Files.createTempDirectory("graft_rep_sch")
+    Files.writeString(in.resolve("a.xml"), catalogXml(1 to 4, Seq("ok")))
+    Files.writeString(in.resolve("we,\"ird\".xml"),
+      catalogXml(5 to 6, Seq("ok")))
+    Files.writeString(in.resolve("bro,\"ken\".xml"), "<catalog><record>")
+    val r1 = XmlPipeline.process(spark, in.toString, out.toString,
+      schemas.toString, runId = 1L, loadTs = ts)
+    assert(r1.rows == 6 && r1.filesSkipped == 1)
+    def report(name: String): Seq[Seq[Any]] = spark.read
+      .option("header", "true").csv(s"$out/$name").collect()
+      .map(_.toSeq).toSeq
+    val errs = report("processing_errors.csv")
+    assert(errs.map(r => (r(0).toString.split('/').last, r(1), r(3))) ==
+      Seq(("bro,\"ken\".xml", "invalid", null)))
+    assert(report("validation_report.csv") == Seq(
+      Seq("invalid", "1", (1.0 / 3).toString),
+      Seq("no_schema", "2", (2.0 / 3).toString)))
+    assert(report("processed_files.csv") ==
+      Seq(Seq("a.xml"), Seq("we,\"ird\".xml")))
+    val meta = report("parquet_metadata.csv")
+    assert(meta.map(r => (r(0), r(1))) ==
+      Seq(("fact_main.parquet", "6")) ++
+      r1.star.dims.keys.toSeq.sorted.map(d =>
+        (s"dim_$d.parquet", r1.star.dims(d).count().toString)))
+    val factCols = spark.read.parquet(s"$out/fact_main.parquet").columns
+    assert(meta.head(2) == factCols.length.toString)
+    val doc = report("schema_documentation.csv")
+    assert(doc.map(_.head).toSet ==
+      Set("id", "record_id", "status", "title", "price"))
+
+    Files.writeString(in.resolve("b.xml"), catalogXml(7 to 9, Seq("ok")))
+    val r2 = XmlPipeline.processIncremental(spark, in.toString,
+      out.toString, schemas.toString, runId = 2L, loadTs = ts)
+    assert(r2.rows == 3)
+    assert(report("processing_manifest.csv").sortBy(_.last.toString) == Seq(
+      Seq(ts.toString, "3", "2", "1", "6", (2.0 / 3).toString, "1"),
+      Seq(ts.toString, "4", "1", "1", "3", "0.5", "2")))
+    assert(report("processed_files.csv").map(_.head).toSet ==
+      Set("a.xml", "we,\"ird\".xml", "b.xml"))
   }
 }
