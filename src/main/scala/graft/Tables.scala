@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.DecimalType
 
 /** Table loaders + numeric-determinism helpers shared by every operator.
@@ -12,7 +18,36 @@ import org.apache.spark.sql.types.DecimalType
   * cannot change the result on either engine.
   */
 object Tables {
-  /** Loads a testdata table. `events.ts` has shipped in two physical
+  /** A resolved table root: its (modification time, length) when it was
+    * stat'ed, and the relation `spark.read.parquet` resolved for it. */
+  private final case class Resolved(stamp: (Long, Long), rel: BaseRelation)
+
+  /** session -> table root -> resolved relation. Keyed by the session
+    * object: a relation carries the session it was resolved in, and the
+    * scan runs with that session's state. */
+  private val resolved =
+    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, Resolved]]()
+
+  /** Loads a testdata table.
+    *
+    * Opening a table (`spark.read.parquet`) lists its root and runs a
+    * Spark job to read the Parquet footers for the schema. That is done
+    * once per (session, root path, root modification time, root length):
+    * the resolved relation (file index plus schema) is memoized, and
+    * every call builds a new DataFrame over it, so each call gets fresh
+    * attribute ids and a table loaded twice in one query self-joins
+    * correctly.
+    *
+    * Freshness: an append or rewrite changes the root's modification
+    * time (a directory root gains or loses entries, as every Spark write
+    * does through its `_temporary` dir) or its length (a file root), so
+    * the next call re-resolves the table. A change that touches only a
+    * sub-directory of the root, made outside Spark, is not seen. The
+    * root is stat'ed before it is resolved, so a write racing a resolve
+    * leaves an older stamp and forces one more resolve, never a stale
+    * hit. A session's entries are dropped when its SparkContext stops.
+    *
+    * Timestamps: `events.ts` has shipped in two physical
     * forms across driver regenerations, and operators must see plain
     * `TimestampType` either way:
     *   - TIMESTAMP(NANOS): Spark reads it only as a nanos-since-epoch
@@ -24,7 +59,8 @@ object Tables {
     *     in the session time zone, which every entry point pins to UTC —
     *     the same instant DuckDB reads, so oracles are unaffected. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = spark.baseRelationToDataFrame(
+      relation(spark, s"$sfDir/$name.parquet"))
     if (name == "events") df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -33,6 +69,37 @@ object Tables {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     } else df
+  }
+
+  /** The memoized relation of the table at `path` (see [[load]]). The
+    * footer job runs outside the map's lock; two racing callers may both
+    * resolve, and either result is correct. A missing root has no stamp,
+    * so it falls through to `spark.read.parquet`'s own error. */
+  private def relation(spark: SparkSession, path: String): BaseRelation = {
+    val byPath = resolved.computeIfAbsent(spark, s => {
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          resolved.remove(s); ()
+        }
+      })
+      new ConcurrentHashMap[String, Resolved]()
+    })
+    val root = new Path(path)
+    val stamp =
+      try {
+        val st = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileStatus(root)
+        (st.getModificationTime, st.getLen)
+      } catch { case _: java.io.FileNotFoundException => null }
+    val hit = byPath.get(path)
+    if (hit != null && hit.stamp == stamp) hit.rel
+    else {
+      val rel = spark.read.parquet(path).queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation
+      }.get
+      byPath.put(path, Resolved(stamp, rel))
+      rel
+    }
   }
 }
 

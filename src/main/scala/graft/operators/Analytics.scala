@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Checkpoint.CutOps
+
 /** Analytical operators beyond the reference's own surface (SURVEY.md §2
   * extensions): exact percentiles, offset windows (lag/lead), ntile
   * bucketing, ordered string aggregation, histogram binning, and filtered
@@ -306,7 +308,6 @@ object Analytics {
           .agg(min(datediff($"ref", $"day")).as("recency_days"),
             count(lit(1)).as("frequency"),
             sum($"cents").as("monetary_cents"))
-        val nc = cust.agg(count(lit(1)).as("nc"))
         // r16: the three quintile ranks used to build as NESTED zipRanks
         // — six SEQUENTIAL jobs (each zipRank is a checkpoint job plus
         // zipWithIndex's partition-count job) re-sorting the full
@@ -315,7 +316,8 @@ object Analytics {
         // off one materialized cust table and join the three thin
         // (custkey, rank) tables back — same rank values by construction
         // (zipRank over the same total orders), ~2 job waves instead of 6
-        val custM = cust.localCheckpoint()
+        val custM = cust.cut
+        val nc = custM.agg(count(lit(1)).as("nc"))
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
         implicit val ec: ExecutionContext = ExecutionContext.global
@@ -2282,9 +2284,10 @@ object Analytics {
     // (unix_micros ≡ epoch_us), values in micro-units, per-type lead()
     // for the holding interval with (ts, event_id) tie-break, and the
     // value×duration products summed in DECIMAL(38,0) (vm·Δt can pass
-    // 2^63; the plain-mean Σvm rides the same decimal so Spark's
-    // silently-wrapping non-ANSI long sum can never diverge from
-    // DuckDB's HUGEINT widening at scale) — both engines reduce exact
+    // 2^63; the plain-mean Σvm rides the same decimal because a Spark
+    // long sum past 2^63 throws ARITHMETIC_OVERFLOW under the ANSI mode
+    // every graft session runs in, where DuckDB's HUGEINT sum widens
+    // and succeeds) — both engines reduce exact
     // integers and perform ONE identical double division at the end.
     // The last observation per type has no successor and drops out
     // (standard left-closed TWAP). Scale shape: one type-keyed window
@@ -3505,8 +3508,8 @@ object Analytics {
     // precedent: 2*midrank stays integral), W+ doubled likewise, and
     // the tie-corrected normal z is one identical double expression.
     // Scale: one order-grain partial agg, a grid-bounded window, 1-row
-    // reduce. BIGINT horizon: w2_plus <= n*(2n+1) wraps past n ~ 1.5e9
-    // pairs (DuckDB raises first — same documented horizon as
+    // reduce. BIGINT horizon: w2_plus <= n*(2n+1) overflows past n ~
+    // 1.5e9 pairs, and both engines raise (same documented horizon as
     // q_mannwhitney's rank sums).
     "q_wilcoxon" -> GQuery(
       (s, d) => {

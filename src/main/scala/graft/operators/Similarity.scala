@@ -20,12 +20,16 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** The embeddings table. INPUT-DOMAIN ASSUMPTION (q_mmd / scatter's
-    * LONG micro-unit sums): coordinates are unit-scale, |x| <= ~1 (the
+    * LONG milli-unit sums): coordinates are unit-scale, |x| <= ~1 (the
     * generator emits unit-normalized vectors), so milli-frozen products
-    * are bounded by ~1e6 and the non-ANSI long sums cannot wrap before
-    * ~9.2e12 vectors. Embeddings with |x| >> 30 would need the decimal
-    * sum form back — revisit the q_mmd/scatter freeze if the generator
-    * ever changes scale. */
+    * are bounded by ~1e6 and a per-cell long sum stays below 2^63 up to
+    * ~9.2e12 vectors; the horizon shrinks with |x|^2. Past it the query
+    * fails: every graft session runs Spark's ANSI mode
+    * (`spark.sql.ansi.enabled`, on by default), where a BIGINT product
+    * or sum past 2^63 throws ARITHMETIC_OVERFLOW instead of wrapping
+    * (pinned by AnsiOverflowSpec). Embeddings far off unit scale would
+    * need the decimal sum form back — revisit the q_mmd/scatter freeze
+    * if the generator ever changes scale. */
   private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
 
   /** q_pca_power's 64x64 centered-scatter table, memoized per

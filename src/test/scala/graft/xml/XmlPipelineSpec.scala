@@ -706,32 +706,6 @@ class XmlPipelineSpec extends SparkSpec {
     tagged.unpersist()
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def countJobs(f: => Unit): Int = {
-    import java.util.concurrent.atomic.AtomicInteger
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
-    val jobCount = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    // listener events are async — wait until the count is stable
-    def quiesce(): Int = {
-      var last = -1
-      var cur = jobCount.get
-      var spins = 0
-      while (cur != last && spins < 50) {
-        last = cur; Thread.sleep(200); cur = jobCount.get; spins += 1
-      }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { quiesce(); jobCount.set(0); f; quiesce() }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("fact write carries a zero-extra-pass observed data contract") {
     def runOnce(contract: Option[Seq[graft.profile.Expectations.Expectation]])
         : XmlPipeline.PipelineReport = {
