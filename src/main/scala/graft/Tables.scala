@@ -1,13 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.DecimalType
 
 /** Table loaders + numeric-determinism helpers shared by every operator.
@@ -18,34 +13,16 @@ import org.apache.spark.sql.types.DecimalType
   * cannot change the result on either engine.
   */
 object Tables {
-  /** A resolved table root: its (modification time, length) when it was
-    * stat'ed, and the relation `spark.read.parquet` resolved for it. */
-  private final case class Resolved(stamp: (Long, Long), rel: BaseRelation)
-
-  /** session -> table root -> resolved relation. Keyed by the session
-    * object: a relation carries the session it was resolved in, and the
-    * scan runs with that session's state. */
-  private val resolved =
-    new ConcurrentHashMap[SparkSession, ConcurrentHashMap[String, Resolved]]()
-
   /** Loads a testdata table.
     *
     * Opening a table (`spark.read.parquet`) lists its root and runs a
     * Spark job to read the Parquet footers for the schema. That is done
-    * once per (session, root path, root modification time, root length):
-    * the resolved relation (file index plus schema) is memoized, and
-    * every call builds a new DataFrame over it, so each call gets fresh
-    * attribute ids and a table loaded twice in one query self-joins
-    * correctly.
-    *
-    * Freshness: an append or rewrite changes the root's modification
-    * time (a directory root gains or loses entries, as every Spark write
-    * does through its `_temporary` dir) or its length (a file root), so
-    * the next call re-resolves the table. A change that touches only a
-    * sub-directory of the root, made outside Spark, is not seen. The
-    * root is stat'ed before it is resolved, so a write racing a resolve
-    * leaves an older stamp and forces one more resolve, never a stale
-    * hit. A session's entries are dropped when its SparkContext stops.
+    * once per session and root stamp: the resolved relation (file index
+    * plus schema) is held in [[Memo]] (key, freshness rule and its limit
+    * are stated there), and every call builds a new DataFrame over it,
+    * so each call gets fresh attribute ids and a table loaded twice in
+    * one query self-joins correctly. A missing root fails with
+    * `spark.read.parquet`'s own error.
     *
     * Timestamps: `events.ts` has shipped in two physical
     * forms across driver regenerations, and operators must see plain
@@ -59,8 +36,12 @@ object Tables {
     *     in the session time zone, which every entry point pins to UTC —
     *     the same instant DuckDB reads, so oracles are unaffected. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.baseRelationToDataFrame(
-      relation(spark, s"$sfDir/$name.parquet"))
+    val root = roots(sfDir, name)
+    val df = spark.baseRelationToDataFrame(Memo(spark, "relation", root) {
+      spark.read.parquet(root.head).queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation => l.relation
+      }.get
+    })
     if (name == "events") df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -71,36 +52,10 @@ object Tables {
     } else df
   }
 
-  /** The memoized relation of the table at `path` (see [[load]]). The
-    * footer job runs outside the map's lock; two racing callers may both
-    * resolve, and either result is correct. A missing root has no stamp,
-    * so it falls through to `spark.read.parquet`'s own error. */
-  private def relation(spark: SparkSession, path: String): BaseRelation = {
-    val byPath = resolved.computeIfAbsent(spark, s => {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          resolved.remove(s); ()
-        }
-      })
-      new ConcurrentHashMap[String, Resolved]()
-    })
-    val root = new Path(path)
-    val stamp =
-      try {
-        val st = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(root)
-        (st.getModificationTime, st.getLen)
-      } catch { case _: java.io.FileNotFoundException => null }
-    val hit = byPath.get(path)
-    if (hit != null && hit.stamp == stamp) hit.rel
-    else {
-      val rel = spark.read.parquet(path).queryExecution.analyzed.collectFirst {
-        case l: LogicalRelation => l.relation
-      }.get
-      byPath.put(path, Resolved(stamp, rel))
-      rel
-    }
-  }
+  /** The root paths of the tables `names` in the testdata dir `sfDir` —
+    * the roots a [[Memo]] entry built from those tables declares. */
+  def roots(sfDir: String, names: String*): Seq[String] =
+    names.map(n => s"$sfDir/$n.parquet")
 }
 
 object Fns {
@@ -157,9 +112,6 @@ object Fns {
   // per-query fixed-cost floor is attacked by cutting JOB count
   // instead (see the r16 optimization record).
 
-  private val splitEstimates =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
   /** Spread guard for CPU-bound work downstream of a SMALL scan: a file
     * under `maxPartitionBytes` scans as ONE split (openCostInBytes floors
     * the split size), serializing all per-row CPU (shingle explodes, hash
@@ -178,8 +130,10 @@ object Fns {
     * isolated-bench regression on the shingle family in round 9. Here
     * the file sizes come from the scan relation's (already-listed) file
     * index and the split count replicates Spark's own
-    * `FilePartition.maxSplitBytes` formula; the estimate is cached per
-    * (root paths, parallelism), so repeat constructions cost a map hit.
+    * `FilePartition.maxSplitBytes` formula; the estimate is held in
+    * [[Memo]] per (session, parallelism, split conf, root paths), so
+    * repeat constructions cost a map hit and a session with other
+    * `maxPartitionBytes`/`openCostInBytes` gets its own estimate.
     * Inputs that are not file scans (memory streams, checkpoints) pass
     * through unchanged — their partitioning already reflects upstream
     * parallelism. */
@@ -196,38 +150,20 @@ object Fns {
       }
     }.flatten
     if (rels.isEmpty) return df
-    // Freshness component in the memo key (ADVICE r10): a store that is
-    // appended to or compacted in a long-lived session changes its root
-    // dirs' modification times, so the stale split estimate cannot
-    // silently skip the repartition. One FileSystem stat per root per
-    // construction — negligible next to planning.
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val mtimes = rels.flatMap(_.location.rootPaths).map { p =>
-      try p.getFileSystem(hconf).getFileStatus(p).getModificationTime
-      catch { case scala.util.control.NonFatal(_) => 0L }
-    }.sum
-    val key = rels.flatMap(_.location.rootPaths).mkString("|") +
-      s"#$cores#$mtimes"
-    val splits = splitEstimates.computeIfAbsent(key, _ => {
-      val conf = spark.sessionState.conf
-      val openCost = conf.filesOpenCostInBytes
+    val conf = spark.sessionState.conf
+    val (maxBytes, openCost) =
+      (conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+    val splits = Memo(spark, s"spread|$cores|$maxBytes|$openCost",
+        rels.flatMap(_.location.rootPaths).map(_.toString)) {
       val sizes = rels.flatMap(
         _.location.listFiles(Nil, Nil).flatMap(_.files.map(_.getLen)))
-      val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      val maxSplit = math.min(maxBytes,
         math.max(openCost, sizes.map(_ + openCost).sum / math.max(1L, cores)))
       sizes.map(s => math.max(1L, (s + maxSplit - 1) / maxSplit)).sum
-    })
+    }
     if (splits < cores) df.repartition(cores.toInt) else df
   }
 
-  /** Distributed dense 1-based rank over a total order: identical values to
-    * `row_number().over(Window.orderBy(order))` but WITHOUT the
-    * single-partition exchange that window needs — the sort is a
-    * range-partitioned exchange and the index is computed per partition
-    * (partition offset + local position) via RDD `zipWithIndex`. This is
-    * the scale-safe dictionary/surrogate-key assigner (same shape as
-    * `star.StarTransformer.buildDimScalable`); the order columns must be a
-    * total order (no ties) for the ranks to be deterministic. */
   /** SQL-standard `ntile(k)` reconstructed from a total-order rank and the
     * row count — the scale-safe twin of `ntile(k).over(Window.orderBy(...))`
     * (which funnels ALL rows through one task): pair with [[zipRank]] for
@@ -258,6 +194,14 @@ object Fns {
       Duration.Inf)
   }
 
+  /** Distributed dense 1-based rank over a total order: identical values to
+    * `row_number().over(Window.orderBy(order))` but WITHOUT the
+    * single-partition exchange that window needs — the sort is a
+    * range-partitioned exchange and the index is computed per partition
+    * (partition offset + local position) via RDD `zipWithIndex`. This is
+    * the scale-safe dictionary/surrogate-key assigner (same shape as
+    * `star.StarTransformer.buildDimScalable`); the order columns must be a
+    * total order (no ties) for the ranks to be deterministic. */
   def zipRank(df: DataFrame, idxName: String, order: Column*): DataFrame = {
     // Materialize the sort once: zipWithIndex runs an internal job to
     // count per-partition rows before the indexing pass, and without the

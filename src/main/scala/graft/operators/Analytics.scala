@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fns, GQuery, Tables}
+import graft.{Fns, GQuery, Memo, Tables}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -144,10 +144,12 @@ object Analytics {
         val mad = daily.crossJoin(broadcast(med))
           .agg(expr("percentile(abs(n_events - med), 0.5)").as("mad"))
         // MAD = 0 (uniform data) must be well-defined identically on both
-        // engines: Spark's non-ANSI x/0 is NULL while DuckDB's IEEE mode is
-        // inf, so nullif(mad, 0) pins the degenerate case to NULL
-        // score/flag on BOTH sides instead of depending on the data never
-        // producing a zero MAD.
+        // engines: graft sessions run Spark's ANSI mode, where a double
+        // x/0 throws DIVIDE_BY_ZERO (the whole query fails), while
+        // DuckDB's IEEE mode gives inf. nullif(mad, 0) pins the
+        // degenerate case to NULL score/flag on BOTH sides instead of
+        // depending on the data never producing a zero MAD (pinned by
+        // AnsiOverflowSpec).
         val madNz = nullif($"mad", lit(0.0))
         daily.crossJoin(broadcast(med)).crossJoin(broadcast(mad))
           .select($"day", $"n_events",
@@ -6275,14 +6277,6 @@ object Analytics {
       s"CAST(s$a AS DOUBLE) / CAST(n$a AS DOUBLE)) / " +
       s"CAST(n$a - 1 AS DOUBLE))"
 
-  /** Memoized (session, dir) value-grain contingency grid for
-    * q_kendall_tau: (quantity, discount, count) — ≤ 50 × 11 cells at
-    * any corpus size; the localCheckpoint pays the one corpus shuffle
-    * once per corpus, not once per construction (the tradeEdges
-    * pattern). */
-  private val kendallCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.DataFrame]()
   /** q_simpsons OLS denominator n*sxx - sx^2 over the moment columns
     * with suffix `sfx` ("g" per-group, "p" pooled). */
   private def simpDenE(sfx: String): String =
@@ -6305,16 +6299,20 @@ object Analytics {
       "(round(ln(1000000.0), 9) - " +
       "round(ln(CAST(1000000 - abs(dev) AS DOUBLE)), 9)))"
 
+  /** Memoized (session, lineitem stamp) value-grain contingency grid for
+    * q_kendall_tau: (quantity, discount, count) — ≤ 50 × 11 cells at
+    * any corpus size; the localCheckpoint pays the one corpus shuffle
+    * once per corpus, not once per construction (the tradeEdges
+    * pattern). */
   private def kendallGrid(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    kendallCache.computeIfAbsent(
-      s"${System.identityHashCode(s)}|$d", _ => {
-        import s.implicits._
-        Tables.load(s, d, "lineitem")
-          .groupBy($"l_quantity".as("x"), $"l_discount".as("y"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint()
-      })
+    Memo(s, "Analytics.kendallGrid", Tables.roots(d, "lineitem")) {
+      import s.implicits._
+      Tables.load(s, d, "lineitem")
+        .groupBy($"l_quantity".as("x"), $"l_discount".as("y"))
+        .agg(count(lit(1)).as("n"))
+        .localCheckpoint()
+    }
 
   /** Double cast shorthand for the q_adf / q_cvm shared expressions. */
   private def dblE(c: String): String = s"CAST($c AS DOUBLE)"

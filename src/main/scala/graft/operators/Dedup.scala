@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fns, GQuery, Tables}
+import graft.{Fns, GQuery, Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -167,40 +167,32 @@ object Dedup {
     * treatment: production materializes them next to the corpus; here
     * `localCheckpoint` is the in-process stand-in. Without this, every
     * downstream query re-runs the same pair self-join + iterative
-    * clustering. */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private val setsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-  private val fpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
-  /** Cache key: a checkpointed DataFrame is bound to the session that built
-    * it, so the key must include the session identity (the IvfIndex
-    * pattern) — a second session in the same JVM (non-forked runMain, mixed
-    * suites) must rebuild, not receive another session's broken plan. */
-  private def cacheKey(s: SparkSession, d: String): String =
-    s"${System.identityHashCode(s)}|$d"
+    * clustering. Every index here is built from `documents` alone and is
+    * rebuilt when that table changes ([[Memo]]). */
+  private def memo(s: SparkSession, d: String, id: String)(
+      build: => DataFrame): DataFrame =
+    Memo(s, s"Dedup.$id", Tables.roots(d, "documents"))(build)
 
   /** Cached (d1, d2, jaccard) pairs for the corpus at `d`. */
   private def jaccardPairs(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    pairCache.computeIfAbsent(cacheKey(s, d),
-      _ => jaccardPairsUncached(s, d).localCheckpoint())
+    memo(s, d, "jaccardPairs")(jaccardPairsUncached(s, d).localCheckpoint())
 
   /** Cached (doc_id, cluster_id) map over >=0.5-Jaccard pairs at `d`. */
   private def clusterMap(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    clusterCache.computeIfAbsent(cacheKey(s, d), _ => {
+    memo(s, d, "clusterMap") {
       import org.apache.spark.sql.functions.col
       val edges = jaccardPairs(s, d).filter(col("jaccard") >= 0.5)
         .select(col("d1").as("id1"), col("d2").as("id2"))
       clusters(edges).withColumnRenamed("id", "doc_id").localCheckpoint()
-    })
+    }
+
+  /** Cached [[prefixSets]], the corpus index of q_prefix_join and
+    * q_minhash_lsh's exact verify. */
+  private def prefixSetsCached(
+      s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
+    memo(s, d, "prefixSets")(prefixSets(s, d).localCheckpoint())
 
   /** Dictionary-encoded sorted shingle sets for the prefix-filtered
     * set-similarity join (q_prefix_join): each document becomes a sorted
@@ -340,8 +332,7 @@ object Dedup {
     * caches above). */
   private def pairStats(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    statsCache.computeIfAbsent(cacheKey(s, d),
-      _ => pairStatsUncached(s, d).localCheckpoint())
+    memo(s, d, "pairStats")(pairStatsUncached(s, d).localCheckpoint())
 
   private def jaccardPairsUncached(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
@@ -655,8 +646,7 @@ object Dedup {
         // exact verify on the candidate set only: join back to the
         // dictionary-encoded shingle sets (the q_prefix_join corpus
         // index, memoized) — O(|candidates|) work, never all-pairs
-        val sets = setsCache.computeIfAbsent(cacheKey(s, d),
-          _ => prefixSets(s, d).localCheckpoint())
+        val sets = prefixSetsCached(s, d)
         // r15 (guide §3.1): shuffled-hash hints on the two set
         // join-backs — they planned as SortMergeJoin, paying sorts of
         // the array-carrying set table that nothing downstream uses
@@ -700,12 +690,11 @@ object Dedup {
         val t = 0.7
         // The dictionary-encoded shingle sets are a derived corpus index
         // (production materializes them next to the corpus, like the IVF
-        // centroids); memoized per (session, dir) exactly like pairCache
-        // so repeated queries against the same corpus pay the shingle +
-        // zipRank dictionary build once. prefixSets itself stays
-        // uncheckpointed for PlanSpec's no-single-partition pin.
-        val sets = setsCache.computeIfAbsent(cacheKey(s, d),
-          _ => prefixSets(s, d).localCheckpoint())
+        // centroids); memoized like the pair set, so repeated queries
+        // against the same corpus pay the shingle + zipRank dictionary
+        // build once. prefixSets itself stays uncheckpointed for
+        // PlanSpec's no-single-partition pin.
+        val sets = prefixSetsCached(s, d)
         // r15 (guide §3.1): every join here ran as SortMergeJoin — four
         // sorts of exploded-prefix / shingle-set tables whose ordering
         // nothing downstream reuses. Shuffled-hash hints drop the sorts;
@@ -1181,11 +1170,11 @@ object Dedup {
         // candidate-bound. Lazily checkpointed: three consumers below
         // share one materialization, and plan construction stays
         // side-effect free (the q_market_basket lesson).
-        // memoized like pairCache: the fingerprint table is a derived
+        // memoized like the pair set: the fingerprint table is a derived
         // corpus index (production materializes it), and re-deriving it
         // per invocation re-paid the full simhash scan on every rep
-        val fps = fpCache.computeIfAbsent(cacheKey(s, d),
-          _ => simhash64(s, d).localCheckpoint(false))
+        val fps = memo(s, d, "simhash64")(
+          simhash64(s, d).localCheckpoint(false))
         val g = fps.select($"fp_hi", $"fp_lo").distinct()
         val chunks = g.select($"fp_hi", $"fp_lo", explode(expr(
           """array(

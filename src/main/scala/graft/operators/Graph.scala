@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -201,17 +201,12 @@ object Graph {
 
   /** The customer->supplier trade graph (orders x lineitem) used by the
     * PageRank queries: edge c<custkey> -> s<suppkey> per distinct trading
-    * pair. Memoized per corpus dir (the graph is a derived corpus table —
+    * pair. Memoized per input table stamp (the graph is a derived table —
     * production materializes it once next to the fact tables; both
     * PageRank queries and every bench rep reuse it instead of re-running
     * the fact join + distinct). */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  // keyed by (session identity, dir) — a checkpointed DataFrame is only
-  // valid on the session that built it (the IvfIndex pattern)
   private def tradeEdges(s: SparkSession, d: String): DataFrame =
-    edgeCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d", _ => {
+    Memo(s, "Graph.tradeEdges", Tables.roots(d, "orders", "lineitem")) {
       import s.implicits._
       Tables.load(s, d, "orders")
         .select($"o_orderkey", $"o_custkey")
@@ -222,44 +217,38 @@ object Graph {
           concat(lit("s"), $"l_suppkey").as("dst"))
         .distinct()
         .cut
-    })
+    }
 
-  /** [[prepareGraph]] over [[tradeEdges]], memoized under the same
-    * (session identity, dir) key: the four setup checkpoints + node count
-    * are paid once per corpus, not once per pageRank invocation. Without
+  /** [[prepareGraph]] over [[tradeEdges]], memoized on the same tables:
+    * the four setup checkpoints + node count are paid once per corpus,
+    * not once per pageRank invocation. Without
     * this, EVERY bench rep of q_pagerank2 re-ran the full setup (the only
     * non-iteration work a 2-round rank has), which made its recorded time
     * hostage to bench ordering and rep policy — the r7 driver record
     * showed it at 4.49 s while the isolated sweep measured 1.74 s. */
-  private val graphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PreparedGraph]()
-
   private def tradeGraph(s: SparkSession, d: String): PreparedGraph =
-    graphCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d",
-      _ => prepareGraph(tradeEdges(s, d)))
+    Memo(s, "Graph.tradeGraph", Tables.roots(d, "orders", "lineitem"))(
+      prepareGraph(tradeEdges(s, d)))
 
   /** The SPARSE (high-quantity) trade subgraph q_label_prop propagates
     * over, memoized + checkpointed like [[tradeEdges]]: without this the
     * label-propagation plan re-runs the orders x lineitem join + distinct
     * once per round (the plan tree references the edge table 4 times). */
-  private val sparseEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def sparseTradeEdges(s: SparkSession, d: String): DataFrame =
-    sparseEdgeCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d",
-      _ => {
-        import s.implicits._
-        Tables.load(s, d, "orders")
-          .select($"o_orderkey", $"o_custkey")
-          .join(Tables.load(s, d, "lineitem")
-            .filter($"l_quantity" >= 45)
-            .select($"l_orderkey".as("o_orderkey"), $"l_suppkey"),
-            "o_orderkey")
-          .select(concat(lit("c"), $"o_custkey").as("src"),
-            concat(lit("s"), $"l_suppkey").as("dst"))
-          .distinct()
-          .cut
-      })
+    Memo(s, "Graph.sparseTradeEdges",
+        Tables.roots(d, "orders", "lineitem")) {
+      import s.implicits._
+      Tables.load(s, d, "orders")
+        .select($"o_orderkey", $"o_custkey")
+        .join(Tables.load(s, d, "lineitem")
+          .filter($"l_quantity" >= 45)
+          .select($"l_orderkey".as("o_orderkey"), $"l_suppkey"),
+          "o_orderkey")
+        .select(concat(lit("c"), $"o_custkey").as("src"),
+          concat(lit("s"), $"l_suppkey").as("dst"))
+        .distinct()
+        .cut
+    }
 
   /** Synchronous min-label propagation over UNDIRECTED `edges`
     * (columns `src`, `dst`), `rounds` rounds: every node repeatedly
@@ -385,24 +374,15 @@ object Graph {
     * q_hierarchy_rollup and q_hierarchy_path — memoized per corpus so
     * the eager checkpoint job runs once across both queries and all
     * bench reps. */
-  private val partEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def partEdges(s: SparkSession, d: String): DataFrame =
-    partEdgeCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d", _ => {
+    Memo(s, "Graph.partEdges", Tables.roots(d, "part")) {
       import s.implicits._
       Tables.load(s, d, "part")
         .select($"p_partkey".cast("long").as("id"))
         .filter($"id" >= 10)
         .select($"id".as("child"), expr("id div 10").as("parent"))
         .cut // static adjacency, reused by 5 rounds
-    })
-
-  private val simEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private val simPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    }
 
   /** The capped co-purchase projection's weighted pair table
     * (s1 < s2, shared) — the common ancestor of BOTH similarity-graph
@@ -410,7 +390,8 @@ object Graph {
     * scale-safe per-node top-k of q_clustering_coeff_topk), memoized so
     * the projection self-join runs once per corpus across all of them. */
   private def supplierSimPairs(s: SparkSession, d: String): DataFrame =
-    simPairCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d", _ => {
+    Memo(s, "Graph.supplierSimPairs",
+        Tables.roots(d, "orders", "lineitem")) {
       import s.implicits._
       val co = Tables.load(s, d, "orders")
         .select($"o_orderkey", $"o_custkey".as("c"))
@@ -432,10 +413,11 @@ object Graph {
         .groupBy(col("a.s").as("s1"), col("b.s").as("s2"))
         .agg(count(lit(1)).as("shared"))
         .cut
-    })
+    }
 
   private def supplierSimEdges(s: SparkSession, d: String): DataFrame =
-    simEdgeCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d", _ => {
+    Memo(s, "Graph.supplierSimEdges",
+        Tables.roots(d, "orders", "lineitem")) {
       import s.implicits._
       val pairs = supplierSimPairs(s, d)
       // 99th percentile of `shared` WITHOUT percentile()'s single sort
@@ -471,7 +453,7 @@ object Graph {
         .filter($"shared".cast("double") > $"thr")
         .select($"s1", $"s2")
         .cut // reused by three self-joins in q_triangles
-    })
+    }
 
   /** Exact global-clustering-coefficient readout over a canonical
     * (s1 < s2) distinct edge table: 3·triangles / wedges with the

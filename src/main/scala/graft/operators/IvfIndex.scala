@@ -1,14 +1,13 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
-import graft.Tables
+import graft.{Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import Checkpoint.CutOps
 
 /** IVF coarse-quantizer index: centroids are a PRECOMPUTED artifact, built
-  * once per (session, corpus) and persisted, never re-derived inside a
+  * once per (session, corpus) and checkpointed, never re-derived inside a
   * query (VERDICT r1 #2 — the r1 `q_ivf_search` re-trained the index per
   * call, a full-corpus posexplode+decimal aggregation that dominated the
   * whole bench).
@@ -16,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * Two builders:
   *  - [[centroidsExact]] — full-corpus, decimal-exact element sums. Bit
   *    identical to the DuckDB oracle's formulation, so verified queries can
-  *    route through it. Cached per (session, dir): training cost is paid
-  *    once per JVM, not once per query.
+  *    route through it. Memoized per (session, embeddings stamp):
+  *    training cost is paid once per session and corpus, not once per
+  *    query.
   *  - [[centroidsSampled]] — the 100 TB production path: deterministic
   *    sample of the corpus, float/double math. At scale the coarse
   *    quantizer only needs approximate cell centers; training on a ~1%
@@ -30,21 +30,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object IvfIndex {
 
-  // keyed by (session hashCode, dir): Verify/Bench use one session, and a
-  // DataFrame is only valid on the session that built it
-  private val cache = new ConcurrentHashMap[String, DataFrame]()
-
   /** Element-wise per-label mean over the full corpus, decimal(28,12) sums
     * cast to double — the exact shape the oracle SQL computes, so nearest-
-    * cell routing agrees across engines. Persisted: ~`labels` rows. */
+    * cell routing agrees across engines. Cut eagerly (~`labels` rows) so
+    * no query pays the training scan; unlike a persisted Dataset, which
+    * Spark's CacheManager pins, a replaced cut is freed with its value. */
   def centroidsExact(s: SparkSession, dir: String): DataFrame =
-    cache.computeIfAbsent(s"${System.identityHashCode(s)}|$dir", { _ =>
-      val cent = meanCentroids(
-        Tables.load(s, dir, "embeddings"), exact = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cent.count() // materialize now so no query pays the training scan
-      cent
-    })
+    Memo(s, "IvfIndex.centroidsExact", Tables.roots(dir, "embeddings"))(
+      meanCentroids(Tables.load(s, dir, "embeddings"), exact = true).cut)
 
   /** Production-path centroids: per-label mean over a deterministic sample.
     * Sampling keys on a hash of vec_id (not `rand()`) so training is
@@ -328,7 +321,4 @@ object IvfIndex {
      else w.trigger(
        org.apache.spark.sql.streaming.Trigger.AvailableNow())).start()
   }
-
-  /** Test hook: drop cached centroids (e.g. between suites). */
-  def clear(): Unit = cache.clear()
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fns, GQuery, Tables}
+import graft.{Fns, GQuery, Memo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,13 +33,12 @@ object Relational {
   // The division is ONE IEEE op on identical integers, so the doubles
   // are bit-identical across engines; queries needing exact sums derive
   // integer cents via round(cost*100) exactly like the other 2-dp money
-  // columns. Memoized per (session, dir) with localCheckpoint so the
-  // pair distinct — the one corpus-scale shuffle — is paid once per
-  // corpus, not once per query (the Graph.tradeEdges pattern).
-  private val psCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // columns. Memoized per (session, lineitem stamp) with
+  // localCheckpoint so the pair distinct — the one corpus-scale shuffle
+  // — is paid once per corpus, not once per query (the Graph.tradeEdges
+  // pattern).
   private def psTwin(s: SparkSession, d: String): DataFrame =
-    psCache.computeIfAbsent(s"${System.identityHashCode(s)}|$d", _ => {
+    Memo(s, "Relational.psTwin", Tables.roots(d, "lineitem")) {
       import s.implicits._
       val hx = md5(concat($"ps_partkey".cast("string"), lit("|"),
         $"ps_suppkey".cast("string")))
@@ -52,7 +51,7 @@ object Relational {
           (conv(substring(hx, 9, 8), 16, 10).cast("long") % 100000 + 100)
             .cast("double") / 100.0)
         .localCheckpoint()
-    })
+    }
 
   /** DuckDB CTE body mirroring [[psTwin]] column-for-column. */
   private val psSql =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, Memo, Tables}
 import graft.functions.VectorOps.cosine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -32,50 +32,43 @@ object Similarity {
     * if the generator ever changes scale. */
   private def emb(s: SparkSession, d: String) = Tables.load(s, d, "embeddings")
 
-  /** q_pca_power's 64x64 centered-scatter table, memoized per
-    * (session identity, dir) — a checkpointed DataFrame is only valid on
-    * the session that built it. */
-  private val scatterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
   /** The 64x64 centered-scatter table M = n·S - m·mᵀ (exact integer
-    * entries from milli-frozen coordinates), memoized per (session, dir)
-    * and eagerly checkpointed — the shared O(data) input of q_pca_power
-    * and q_pca_var_explained. */
+    * entries from milli-frozen coordinates), memoized per (session,
+    * embeddings stamp) and eagerly checkpointed — the shared O(data)
+    * input of q_pca_power and q_pca_var_explained. */
   private def scatter(
       s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    scatterCache.computeIfAbsent(
-      s"${System.identityHashCode(s)}|$d", _ => {
-        import s.implicits._
-        // r15: Gram sufficient statistics via the IN-ROW outer product
-        // (nested transform + one explode) instead of the vec_id
-        // self-join of the exploded table — the coordinate pairs live
-        // inside one row's array, so no exchange is needed before the
-        // (i,j) partial agg (same rows, same long sums, same results;
-        // the q_mmd rewrite, shared rationale there).
-        val xs = emb(s, d)
-          .select(expr("transform(embedding, x -> " +
-              "CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))")
-            .as("xs"))
-          .localCheckpoint() // three consumers: Gram, mean, count
-        val n = xs.agg((sum(size($"xs")) / 64).cast("bigint").as("n"))
-        val m = xs.select(posexplode($"xs").as(Seq("i", "xi")))
-          .groupBy($"i").agg(sum($"xi").as("mi"))
-        // chained posexplode, not nested transform — see the q_mmd
-        // pairSums note (HOF lambdas are interpreted + boxed)
-        val gram = xs
-          .select($"xs", posexplode($"xs").as(Seq("i", "a")))
-          .select($"i", $"a", posexplode($"xs").as(Seq("j", "b")))
-          .groupBy($"i", $"j")
-          .agg(sum($"a" * $"b").as("s_ij"))
-        gram
-          .join(broadcast(m), "i")
-          .join(broadcast(m.select($"i".as("j"), $"mi".as("mj"))), "j")
-          .crossJoin(broadcast(n))
-          .select($"i", $"j",
-            ($"n" * $"s_ij" - $"mi" * $"mj").as("m_ij"))
-          .localCheckpoint() // consumers: power steps + Rayleigh terms
-      })
+    Memo(s, "Similarity.scatter", Tables.roots(d, "embeddings")) {
+      import s.implicits._
+      // r15: Gram sufficient statistics via the IN-ROW outer product
+      // (nested transform + one explode) instead of the vec_id
+      // self-join of the exploded table — the coordinate pairs live
+      // inside one row's array, so no exchange is needed before the
+      // (i,j) partial agg (same rows, same long sums, same results;
+      // the q_mmd rewrite, shared rationale there).
+      val xs = emb(s, d)
+        .select(expr("transform(embedding, x -> " +
+            "CAST(round(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT))")
+          .as("xs"))
+        .localCheckpoint() // three consumers: Gram, mean, count
+      val n = xs.agg((sum(size($"xs")) / 64).cast("bigint").as("n"))
+      val m = xs.select(posexplode($"xs").as(Seq("i", "xi")))
+        .groupBy($"i").agg(sum($"xi").as("mi"))
+      // chained posexplode, not nested transform — see the q_mmd
+      // pairSums note (HOF lambdas are interpreted + boxed)
+      val gram = xs
+        .select($"xs", posexplode($"xs").as(Seq("i", "a")))
+        .select($"i", $"a", posexplode($"xs").as(Seq("j", "b")))
+        .groupBy($"i", $"j")
+        .agg(sum($"a" * $"b").as("s_ij"))
+      gram
+        .join(broadcast(m), "i")
+        .join(broadcast(m.select($"i".as("j"), $"mi".as("mj"))), "j")
+        .crossJoin(broadcast(n))
+        .select($"i", $"j",
+          ($"n" * $"s_ij" - $"mi" * $"mj").as("m_ij"))
+        .localCheckpoint() // consumers: power steps + Rayleigh terms
+    }
 
   /** One power step from v0 = 1 over the scatter, max-normalized to
     * frozen integer micro-units — q_pca_power's v1' and the direction

@@ -11,7 +11,8 @@ import org.apache.spark.sql.SparkSession
   * published tier (`BASELINE.md`: 100 files / ~40 MB / 240k records, 15 s
   * with validation): generates a reference-shaped corpus (attributes +
   * nested block + repeated element + business-key comment) and times
-  * [[XmlPipeline.process]] on local[8] to mirror the reference's 8 workers.
+  * [[XmlPipeline.process]] on local[`SPARK_GRAFT_CPUS`], default 8 to
+  * mirror the reference's 8 workers.
   *
   * Usage: `sbt "runMain graft.xml.PipelineBench [nFiles] [recordsPerFile]"`.
   * Prints one JSON line: {"files":N,"bytes":B,"records":R,"sec":S}.
@@ -75,7 +76,8 @@ object PipelineBench {
 
     val spark = SparkSession.builder()
       .appName("graft-pipeline-bench")
-      .master("local[8]") // the reference baseline ran 8 workers
+      // the reference baseline ran 8 workers
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -12,7 +12,6 @@ class IvfIndexSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("exact centroids are cached: second call returns the same instance") {
-    IvfIndex.clear()
     val c1 = IvfIndex.centroidsExact(spark, dir)
     val c2 = IvfIndex.centroidsExact(spark, dir)
     assert(c1 eq c2) // memoized — queries never re-train
