@@ -217,8 +217,74 @@ object Fns {
 }
 
 /** One verifiable operator: a Spark implementation plus (when the operator is
-  * SQL-expressible) DuckDB oracle SQL over the same parquet tables. */
+  * SQL-expressible) DuckDB oracle SQL over the same parquet tables.
+  *
+  * Two forms:
+  *   - `GQuery(fn, oracle, doc)`: `fn` is DataFrame code and `oracle` the
+  *     DuckDB text it must hash-match;
+  *   - `GQuery.sql(text, doc)`: the query is written once. `oracle` is
+  *     `Some(text)` and `fn` runs the same text on Spark, so the oracle
+  *     check is DuckDB and Spark agreeing on one text. */
 final case class GQuery(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     doc: String = "")
+
+object GQuery {
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+  import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+  import org.apache.spark.sql.catalyst.plans.logical.{
+    LogicalPlan, SubqueryAlias, UnresolvedWith}
+  import org.apache.spark.sql.graftshim.Bridge
+
+  /** A query whose Spark side is its oracle text. */
+  def sql(text: String, doc: String = ""): GQuery =
+    GQuery(SqlText(text), Some(text), doc)
+
+  /** The `fn` of a [[sql]] query. */
+  final case class SqlText(text: String)
+      extends ((SparkSession, String) => DataFrame) {
+    def apply(spark: SparkSession, dir: String): DataFrame =
+      run(spark, dir, text)
+  }
+
+  /** Runs `text` on Spark over the testdata tables in `dir`.
+    *
+    * Tables are bound per call, with no temp view and no catalog write:
+    * the text is parsed with the session's parser, and every single-part
+    * table reference that names one of [[Sql.TableNames]] and is not a
+    * CTE in scope becomes `Tables.load(spark, dir, name)`'s analyzed plan
+    * under an alias of that name. So a session's own views are never
+    * read or replaced, each reference gets fresh attribute ids (a
+    * self-join resolves), the table-open [[Memo]] is hit, and `events.ts`
+    * is a timestamp. A CTE named like a table shadows it in the main
+    * query, its subqueries and later definitions, as in DuckDB; in its
+    * own body (unless `WITH RECURSIVE`) the name is still the table, as
+    * in Spark's analyzer (DuckDB rejects such text). CTE bodies are inner
+    * children of `UnresolvedWith`, which a plain tree transform does not
+    * reach, so they are bound explicitly; subquery plans are reached
+    * through their expressions. */
+  def run(spark: SparkSession, dir: String, text: String): DataFrame = {
+    def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
+    val tables = Sql.TableNames.toSet
+    def bind(p: LogicalPlan, ctes: Set[String]): LogicalPlan = p match {
+      case w: UnresolvedWith =>
+        var scope = ctes
+        val rels = w.cteRelations.map { case (n, body, depth) =>
+          val own = if (w.allowRecursion) scope + key(n) else scope
+          scope += key(n)
+          (n, bind(body, own).asInstanceOf[SubqueryAlias], depth)
+        }
+        w.copy(child = bind(w.child, scope), cteRelations = rels)
+      case u: UnresolvedRelation if u.multipartIdentifier.size == 1 &&
+          tables(key(u.name)) && !ctes(key(u.name)) =>
+        SubqueryAlias(u.name,
+          Bridge.analyzed(Tables.load(spark, dir, key(u.name))))
+      case _ =>
+        p.mapChildren(bind(_, ctes)).transformExpressions {
+          case e: SubqueryExpression => e.withNewPlan(bind(e.plan, ctes))
+        }
+    }
+    Bridge.ofRows(spark, bind(Bridge.parse(spark, text), Set.empty))
+  }
+}

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Fns, GQuery, Tables}
+import graft.{GQuery, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -174,30 +174,8 @@ object Inference {
     // is rebuilt as rows x cols left-join cells; per-cell terms freeze
     // to micro so the grid sum is exact. One grouped agg on orders +
     // three broadcast-sized rollups of it.
-    "q_cramers_v" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val cells = Tables.load(s, d, "orders")
-          .groupBy($"o_orderstatus".as("st"), $"o_orderpriority".as("pr"))
-          .agg(count(lit(1)).as("obs"))
-        val rows = cells.groupBy($"st").agg(sum($"obs").as("rt"))
-        val cols = cells.groupBy($"pr").agg(sum($"obs").as("ct"))
-        val tot = cells.agg(sum($"obs").as("n"),
-          countDistinct($"st").as("r"), countDistinct($"pr").as("c"))
-        val grid = rows.crossJoin(cols)
-          .join(cells, Seq("st", "pr"), "left")
-          .na.fill(0L, Seq("obs"))
-          .crossJoin(broadcast(tot))
-          .select($"n", $"r", $"c", expr(chiTermE("obs")).as("t6"))
-        grid.groupBy($"n", $"r", $"c")
-          .agg(sum($"t6").as("chi2_micro"))
-          .select($"n", $"r", $"c", $"chi2_micro",
-            expr("CAST(round(sqrt(CAST(chi2_micro AS DOUBLE) / " +
-              "1000000.0 / (CAST(n AS DOUBLE) * " +
-              "CAST(least(r, c) - 1 AS DOUBLE))) * 1000000.0, 0) " +
-              "AS BIGINT)").as("v_micro"))
-      },
-      Some(s"""WITH cells AS (
+    "q_cramers_v" -> GQuery.sql(
+      s"""WITH cells AS (
         |  SELECT o_orderstatus AS st, o_orderpriority AS pr,
         |    CAST(COUNT(*) AS BIGINT) AS obs
         |  FROM orders GROUP BY 1, 2),
@@ -216,7 +194,7 @@ object Inference {
         |  CAST(round(sqrt(CAST(SUM(t6) AS DOUBLE) / 1000000.0 /
         |    (CAST(n AS DOUBLE) * CAST(least(r, c) - 1 AS DOUBLE))) *
         |    1000000.0, 0) AS BIGINT) AS v_micro
-        |FROM grid GROUP BY 1, 2, 3""".stripMargin),
+        |FROM grid GROUP BY 1, 2, 3""".stripMargin,
       "Cramér's V over the status x priority contingency grid " +
         "(full grid incl. empty cells, micro-frozen chi-square terms)"),
 
@@ -328,41 +306,8 @@ object Inference {
     // corpus-exact moment battery frozen at 9 dp; log Lambda is emitted
     // (micro) so no overflow at any effect size. significant compares
     // against ln(20) = the alpha = 0.05 always-valid fence.
-    "q_msprt" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val ev = Tables.load(s, d, "events")
-          .filter($"value".isNotNull)
-          .select(to_date($"ts").as("day"),
-            pmod($"user_id", lit(2L)).as("arm"),
-            expr("CAST(round(value * 1000000.0, 0) AS BIGINT)")
-              .as("v6"))
-        val mom = ev.agg(count(lit(1)).as("n"),
-          sum($"v6".cast(d38)).as("s1"),
-          sum(($"v6".cast(d38)) * ($"v6".cast(d38))).as("s2"))
-          .select(expr("round((CAST(s2 AS DOUBLE) / 1e12 - " +
-            "CAST(s1 AS DOUBLE) / 1e6 * CAST(s1 AS DOUBLE) / 1e6 / " +
-            "CAST(n AS DOUBLE)) / CAST(n - 1 AS DOUBLE), 9)").as("g"))
-        val daily = ev.groupBy($"day", $"arm")
-          .agg(count(lit(1)).as("dn"), sum($"v6").as("ds"))
-        val wArm = Window.partitionBy($"arm").orderBy($"day")
-        val cum = daily
-          .withColumn("cn", sum($"dn").over(wArm))
-          .withColumn("cs", sum($"ds").over(wArm))
-        val c0 = cum.filter($"arm" === 0L)
-          .select($"day", $"cn".as("nc"), $"cs".as("sc6"))
-        val c1 = cum.filter($"arm" === 1L)
-          .select($"day", $"cn".as("nt"), $"cs".as("st6"))
-        c0.join(c1, "day")
-          .crossJoin(broadcast(mom))
-          .select($"day", $"nc", $"nt",
-            expr(s"CAST(round(${msprtLlamE("g")} * 1000000.0, 0) " +
-              "AS BIGINT)").as("log_lambda_micro"))
-          .withColumn("significant", $"log_lambda_micro" > 2995732L)
-          .orderBy($"day")
-      },
-      Some(s"""WITH ev AS (
+    "q_msprt" -> GQuery.sql(
+      s"""WITH ev AS (
         |  SELECT CAST(ts AS DATE) AS day, user_id % 2 AS arm,
         |    CAST(round(value * 1000000.0, 0) AS BIGINT) AS v6
         |  FROM events WHERE value IS NOT NULL),
@@ -393,7 +338,7 @@ object Inference {
         |JOIN (SELECT day, cn, cs AS st6 FROM cum WHERE arm = 1) c1
         |  USING (day), mom,
         |  LATERAL (SELECT c0.cn AS nc, c1.cn AS nt) nn
-        |ORDER BY c0.day""".stripMargin),
+        |ORDER BY c0.day""".stripMargin,
       "mixture-SPRT always-valid A/B monitor: per-day log Lambda from " +
         "exact cumulative arm sums, ln(20) fence"),
 
@@ -407,39 +352,8 @@ object Inference {
     // corpus size); eligibility is gap-correct (a day scores only if
     // day-7 traded; the MASE denominator only over consecutive-day
     // pairs). One orders rollup + two bounded self-joins.
-    "q_forecast_eval" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val rev = Tables.load(s, d, "orders")
-          .groupBy(to_date($"o_orderdate").as("day"))
-          .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-            .as("r"))
-        val e7 = rev.as("a")
-          .join(rev.as("b"), $"a.day" === date_add($"b.day", 7))
-          .select($"a.r".as("r"), $"b.r".as("f"))
-          .agg(count(lit(1)).as("n7"),
-            sum(abs($"r" - $"f")).as("sae"),
-            sum(expr("CAST(round(CAST(abs(r - f) AS DOUBLE) / " +
-              "CAST(r AS DOUBLE) * 1000000.0, 0) AS BIGINT)"))
-              .as("sape"),
-            sum(expr("CAST(round(2.0 * CAST(abs(r - f) AS DOUBLE) / " +
-              "CAST(r + f AS DOUBLE) * 1000000.0, 0) AS BIGINT)"))
-              .as("ssm"))
-        val e1 = rev.as("a")
-          .join(rev.as("b"), $"a.day" === date_add($"b.day", 1))
-          .select($"a.r".as("r"), $"b.r".as("f"))
-          .agg(count(lit(1)).as("n1"), sum(abs($"r" - $"f")).as("sae1"))
-        e7.crossJoin(e1)
-          .select($"n7",
-            expr("CAST(round(CAST(sape AS DOUBLE) / " +
-              "CAST(n7 AS DOUBLE), 0) AS BIGINT)").as("mape_micro"),
-            expr("CAST(round(CAST(ssm AS DOUBLE) / " +
-              "CAST(n7 AS DOUBLE), 0) AS BIGINT)").as("smape_micro"),
-            expr("CAST(round(CAST(sae AS DOUBLE) / CAST(n7 AS DOUBLE)" +
-              " / (CAST(sae1 AS DOUBLE) / CAST(n1 AS DOUBLE)) * " +
-              "1000000.0, 0) AS BIGINT)").as("mase_micro"))
-      },
-      Some("""WITH rev AS (
+    "q_forecast_eval" -> GQuery.sql(
+      """WITH rev AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |    CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
         |      AS BIGINT) AS r
@@ -466,7 +380,7 @@ object Inference {
         |  CAST(round(CAST(sae AS DOUBLE) / CAST(n7 AS DOUBLE) /
         |    (CAST(sae1 AS DOUBLE) / CAST(n1 AS DOUBLE)) * 1000000.0, 0)
         |    AS BIGINT) AS mase_micro
-        |FROM e7, e1""".stripMargin),
+        |FROM e7, e1""".stripMargin,
       "MAPE/SMAPE/MASE of the seasonal-naive day-7 revenue forecast " +
         "(exact cents, micro-frozen per-day terms, gap-correct)"),
 
@@ -634,27 +548,8 @@ object Inference {
     // day) — no float enters until the reported G itself. One rollup,
     // one 1-row moment battery, one top-1 (TakeOrdered, not a global
     // window).
-    "q_grubbs" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.load(s, d, "events")
-          .groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("x"))
-        val tot = daily.agg(count(lit(1)).as("nd"), sum($"x").as("s1"),
-          sum($"x".cast(d38) * $"x".cast(d38)).as("s2"))
-        daily.crossJoin(broadcast(tot))
-          .select($"day", $"x", $"nd", $"s1", $"s2",
-            abs($"x" * $"nd" - $"s1").as("dev"))
-          .orderBy($"dev".desc, $"day".asc)
-          .limit(1)
-          .select($"nd".as("n_days"), $"day", $"x",
-            expr("CAST(round(CAST(dev AS DOUBLE) / CAST(nd AS DOUBLE)" +
-              " / sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * " +
-              "CAST(s1 AS DOUBLE) / CAST(nd AS DOUBLE)) / " +
-              "CAST(nd - 1 AS DOUBLE)) * 1000000.0, 0) AS BIGINT)")
-              .as("g_micro"))
-      },
-      Some("""WITH daily AS (
+    "q_grubbs" -> GQuery.sql(
+      """WITH daily AS (
         |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
         |  FROM events GROUP BY 1),
         |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd,
@@ -670,7 +565,7 @@ object Inference {
         |    CAST(s1 AS DOUBLE) / CAST(nd AS DOUBLE)) /
         |    CAST(nd - 1 AS DOUBLE)) * 1000000.0, 0) AS BIGINT)
         |    AS g_micro
-        |FROM top""".stripMargin),
+        |FROM top""".stripMargin,
       "Grubbs outlier statistic + argmax day over daily event counts " +
         "(exact-integer argmax, frozen moments)"),
 
@@ -810,39 +705,8 @@ object Inference {
     // R^2; the intercept is read off in micro directly). Shapes: one
     // part-keyed lineitem rollup (the corpus shuffle), one partkey
     // join, one brand-keyed 25-group reduce — no windows.
-    "q_elasticity" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val qty = Tables.load(s, d, "lineitem")
-          .groupBy($"l_partkey")
-          .agg(sum(expr("CAST(round(l_quantity * 100, 0) AS BIGINT)"))
-            .as("q100"))
-        val pts = qty.join(Tables.load(s, d, "part")
-            .select($"p_partkey", $"p_brand", $"p_retailprice"),
-            $"l_partkey" === $"p_partkey")
-          .select($"p_brand",
-            expr("CAST(round(ln(p_retailprice) * 1000000.0, 0) " +
-              "AS BIGINT)").as("u6"),
-            expr("CAST(round(ln(CAST(q100 AS DOUBLE) / 100.0) * " +
-              "1000000.0, 0) AS BIGINT)").as("v6"))
-        pts.groupBy($"p_brand")
-          .agg(count(lit(1)).as("n"),
-            sum($"u6").as("su"), sum($"v6").as("sv"),
-            sum($"u6".cast(d38) * $"v6".cast(d38)).as("suv"),
-            sum($"u6".cast(d38) * $"u6".cast(d38)).as("suu"),
-            sum($"v6".cast(d38) * $"v6".cast(d38)).as("svv"))
-          .select($"p_brand", $"n".as("n_parts"),
-            expr(s"CAST(round($elastBetaE * 1000000.0, 0) AS BIGINT)")
-              .as("beta_micro"),
-            expr(s"CAST(round((CAST(sv AS DOUBLE) - $elastBetaE * " +
-              "CAST(su AS DOUBLE)) / CAST(n AS DOUBLE), 0) AS BIGINT)")
-              .as("alpha_micro"),
-            expr(s"CAST(round($elastR2E * 1000000.0, 0) AS BIGINT)")
-              .as("r2_micro"))
-          .orderBy($"p_brand")
-      },
-      Some(s"""WITH qty AS (
+    "q_elasticity" -> GQuery.sql(
+      s"""WITH qty AS (
         |  SELECT l_partkey,
         |    CAST(SUM(CAST(round(l_quantity * 100, 0) AS BIGINT))
         |      AS BIGINT) AS q100
@@ -872,7 +736,7 @@ object Inference {
         |    CAST(su AS DOUBLE)) / CAST(n AS DOUBLE), 0) AS BIGINT)
         |    AS alpha_micro,
         |  CAST(round($elastR2E * 1000000.0, 0) AS BIGINT) AS r2_micro
-        |FROM m ORDER BY p_brand""".stripMargin),
+        |FROM m ORDER BY p_brand""".stripMargin,
       "log-log price elasticity of demand per brand (micro-frozen " +
         "logs, exact regression moments, 25-group reduce)"),
 
@@ -957,33 +821,8 @@ object Inference {
     // carries real signal (U2 < 1) or the series is a random walk
     // (U2 >= 1). Squared errors are exact decimal integers (cent
     // diffs squared); one rollup + one 3-way bounded day join.
-    "q_theil_u" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val rev = Tables.load(s, d, "orders")
-          .groupBy(to_date($"o_orderdate").as("day"))
-          .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-            .as("r"))
-        rev.as("a")
-          .join(rev.as("b7"), $"a.day" === date_add($"b7.day", 7))
-          .join(rev.as("b1"), $"a.day" === date_add($"b1.day", 1))
-          .select($"a.r".as("r"), $"b7.r".as("f7"), $"b1.r".as("f1"))
-          .agg(count(lit(1)).as("n"),
-            sum((($"r" - $"f7").cast(d38)) * (($"r" - $"f7").cast(d38)))
-              .as("se7"),
-            sum((($"r" - $"f1").cast(d38)) * (($"r" - $"f1").cast(d38)))
-              .as("se1"))
-          .select($"n",
-            expr("CAST(round(sqrt(CAST(se7 AS DOUBLE) / " +
-              "CAST(se1 AS DOUBLE)) * 1000000.0, 0) AS BIGINT)")
-              .as("u2_micro"),
-            expr("CAST(round(sqrt(CAST(se7 AS DOUBLE) / " +
-              "CAST(n AS DOUBLE)), 0) AS BIGINT)").as("rmse7_cents"),
-            expr("CAST(round(sqrt(CAST(se1 AS DOUBLE) / " +
-              "CAST(n AS DOUBLE)), 0) AS BIGINT)").as("rmse1_cents"))
-      },
-      Some("""WITH rev AS (
+    "q_theil_u" -> GQuery.sql(
+      """WITH rev AS (
         |  SELECT CAST(o_orderdate AS DATE) AS day,
         |    CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
         |      AS BIGINT) AS r
@@ -1006,7 +845,7 @@ object Inference {
         |    AS BIGINT) AS rmse7_cents,
         |  CAST(round(sqrt(CAST(se1 AS DOUBLE) / CAST(n AS DOUBLE)), 0)
         |    AS BIGINT) AS rmse1_cents
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "Theil's U2 skill score of the day-7 vs day-1 revenue forecast " +
         "(exact decimal squared errors, gap-correct common days)"),
 
@@ -1162,40 +1001,8 @@ object Inference {
     // freeze at 9 dp into an exact decimal sum. The rank window runs
     // over the bounded day table. Reports the n-adjusted A*^2 with
     // the 0.752 (5%, unknown mean/var) fence.
-    "q_anderson_darling" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.load(s, d, "events")
-          .groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("x"))
-        val tot = daily.agg(count(lit(1)).as("n"), sum($"x").as("s1"),
-          sum($"x".cast(d38) * $"x".cast(d38)).as("s2"))
-        val staged = daily.crossJoin(broadcast(tot))
-          .select($"day", $"n", expr(adZE).as("z"))
-          .select($"day", $"n", $"z", abs($"z").as("az"))
-          .select($"day", $"n", $"z", expr(adTailE).as("tail"))
-          .select($"day", $"n",
-            expr("CASE WHEN z >= 0.0 THEN ln(1.0 - tail) " +
-              "ELSE ln(tail) END").as("lp"),
-            expr("CASE WHEN z >= 0.0 THEN ln(tail) " +
-              "ELSE ln(1.0 - tail) END").as("lq"),
-            $"z")
-          .withColumn("i", row_number().over(
-            Window.orderBy($"z".asc, $"day".asc)))
-        staged
-          .select($"n",
-            expr("CAST(round((2.0 * CAST(i AS DOUBLE) - 1.0) * lp + " +
-              "(2.0 * CAST(n - i AS DOUBLE) + 1.0) * lq, 9) " +
-              "AS DECIMAL(24,9))").as("t9"))
-          .groupBy($"n").agg(sum($"t9").as("tsum"))
-          .select($"n".as("n_days"),
-            expr(s"CAST(round($adA2E * 1000000.0, 0) AS BIGINT)")
-              .as("a2_micro"),
-            expr(s"CAST(round($adA2E * $adCorrE * 1000000.0, 0) " +
-              "AS BIGINT)").as("a2_star_micro"))
-          .withColumn("reject", $"a2_star_micro" > 752000L)
-      },
-      Some(s"""WITH daily AS (
+    "q_anderson_darling" -> GQuery.sql(
+      s"""WITH daily AS (
         |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
         |  FROM events GROUP BY 1),
         |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -1227,7 +1034,7 @@ object Inference {
         |    AS a2_star_micro,
         |  CAST(round($adA2E * $adCorrE * 1000000.0, 0) AS BIGINT)
         |    > 752000 AS reject
-        |FROM g""".stripMargin),
+        |FROM g""".stripMargin,
       "Anderson-Darling normality test over daily event counts " +
         "(A&S 26.2.17 normal tail, 9-dp frozen rank terms, n-adjusted " +
         "A* with the 0.752 fence)"),
@@ -1283,39 +1090,15 @@ object Inference {
     // Holm-Bonferroni step-down over the SAME 5-metric Welch battery —
     // the FWER-controlling companion to q_bh_fdr's FDR control (Holm
     // guards "any false rejection", BH guards the false-discovery
-    // RATE; a platform reports both). Shares [[welchP]] verbatim, so
+    // RATE; a platform reports both). Shares [[welchPCtesE]] verbatim, so
     // the two procedures are guaranteed to disagree only in their
     // decision chains: Holm rejects while p_(i) <= alpha/(m-i+1) and
     // STOPS at the first failure (the step-down monotonicity BH does
     // not have) — expressed as a running failure max over the
     // category-bounded p-value table (<= |event types| rows, the
     // q_bh_fdr allowlist bound). Alpha = 0.05.
-    "q_holm" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val run = Window.orderBy($"p9".asc, $"event_type".asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val full = Window.orderBy($"p9".asc, $"event_type".asc)
-          .rowsBetween(Window.unboundedPreceding,
-            Window.unboundedFollowing)
-        welchP(s, d)
-          .withColumn("rank", row_number().over(
-            Window.orderBy($"p9".asc, $"event_type".asc)))
-          .withColumn("m", count(lit(1)).over(full))
-          .withColumn("fail",
-            expr("CASE WHEN CAST(p9 AS DOUBLE) > 0.05 / " +
-              "CAST(m - rank + 1 AS DOUBLE) THEN 1 ELSE 0 END"))
-          .withColumn("anyfail", max($"fail").over(run))
-          .select($"event_type",
-            expr("CAST(round(CAST(p9 AS DOUBLE) * 1000000.0, 0) " +
-              "AS BIGINT)").as("p_micro"),
-            $"rank".cast("long").as("rank"),
-            expr("CAST(round(0.05 / CAST(m - rank + 1 AS DOUBLE) " +
-              "* 1000000.0, 0) AS BIGINT)").as("threshold_micro"),
-            ($"anyfail" === 0).as("reject"))
-          .orderBy($"rank")
-      },
-      Some(s"""WITH $welchPCtesE,
+    "q_holm" -> GQuery.sql(
+      s"""WITH $welchPCtesE,
         |r AS (
         |  SELECT event_type, p9,
         |    CAST(row_number() OVER (ORDER BY p9, event_type)
@@ -1336,7 +1119,7 @@ object Inference {
         |  CAST(round(0.05 / CAST(m - rank + 1 AS DOUBLE) * 1000000.0,
         |    0) AS BIGINT) AS threshold_micro,
         |  anyfail = 0 AS reject
-        |FROM f ORDER BY rank""".stripMargin),
+        |FROM f ORDER BY rank""".stripMargin,
       "Holm-Bonferroni FWER step-down over the shared 5-metric Welch " +
         "battery (running-failure max, stops at the first miss)"),
 
@@ -1432,49 +1215,8 @@ object Inference {
     // cannot answer this — failing to find a difference is not
     // evidence of equivalence. One scan, one 1-row reduce, shared
     // A&S tails.
-    "q_tost" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val w = Tables.load(s, d, "events")
-          .filter($"value".isNotNull)
-          .select(pmod($"user_id", lit(2L)).as("arm"),
-            expr("CAST(round(value * 1000000.0, 0) AS BIGINT)")
-              .as("v6"))
-          .groupBy()
-          .agg(sum(when($"arm" === 0L, 1L).otherwise(0L)).as("nc"),
-            sum(when($"arm" === 0L, $"v6".cast(d38))).as("sc"),
-            sum(when($"arm" === 0L,
-              $"v6".cast(d38) * $"v6".cast(d38))).as("qc"),
-            sum(when($"arm" === 1L, 1L).otherwise(0L)).as("nt"),
-            sum(when($"arm" === 1L, $"v6".cast(d38))).as("st"),
-            sum(when($"arm" === 1L,
-              $"v6".cast(d38) * $"v6".cast(d38))).as("qt"))
-        w.select(expr(tostDiffE).as("diff"), expr(tostDeltaE).as("dl"),
-            expr(welchSeE).as("se"))
-          .select($"diff", $"dl", $"se",
-            (($"diff" + $"dl") / $"se").as("zlo"),
-            (($"diff" - $"dl") / $"se").as("zhi"))
-          .select($"diff", $"dl", $"se", $"zlo", $"zhi",
-            abs($"zlo").as("azlo"), abs($"zhi").as("azhi"))
-          .select($"diff", $"dl", $"se",
-            expr(s"CASE WHEN zlo >= 0.0 THEN ${gaussTail("azlo")} " +
-              s"ELSE 1.0 - ${gaussTail("azlo")} END").as("p1"),
-            expr(s"CASE WHEN zhi >= 0.0 THEN 1.0 - " +
-              s"${gaussTail("azhi")} ELSE ${gaussTail("azhi")} END")
-              .as("p2"))
-          .select(
-            expr("CAST(round(diff * 1000000.0, 0) AS BIGINT)")
-              .as("diff_micro"),
-            expr("CAST(round(dl * 1000000.0, 0) AS BIGINT)")
-              .as("delta_micro"),
-            expr("CAST(round(se * 1000000.0, 0) AS BIGINT)")
-              .as("se_micro"),
-            expr("CAST(round(greatest(p1, p2) * 1000000.0, 0) " +
-              "AS BIGINT)").as("p_tost_micro"),
-            expr("p1 <= 0.05 AND p2 <= 0.05").as("equivalent"))
-      },
-      Some(s"""WITH w AS (
+    "q_tost" -> GQuery.sql(
+      s"""WITH w AS (
         |  SELECT
         |    CAST(SUM(CASE WHEN arm = 0 THEN 1 END) AS BIGINT) AS nc,
         |    SUM(CASE WHEN arm = 0 THEN v6d END) AS sc,
@@ -1506,7 +1248,7 @@ object Inference {
         |  CAST(round(greatest(p1, p2) * 1000000.0, 0) AS BIGINT)
         |    AS p_tost_micro,
         |  p1 <= 0.05 AND p2 <= 0.05 AS equivalent
-        |FROM s4""".stripMargin),
+        |FROM s4""".stripMargin,
       "TOST equivalence gate at a 5%-of-control margin (two one-sided " +
         "Welch z-tests, shared A&S tails, frozen margin)"),
 
@@ -1574,46 +1316,8 @@ object Inference {
     // exact Lan-DeMets spending needs the multivariate normal).
     // Same exact cumulative integer battery as q_msprt; the horizon
     // total folds in as a 1-row broadcast.
-    "q_obrien_fleming" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val ev = Tables.load(s, d, "events")
-          .filter($"value".isNotNull)
-          .select(to_date($"ts").as("day"),
-            pmod($"user_id", lit(2L)).as("arm"),
-            expr("CAST(round(value * 1000000.0, 0) AS BIGINT)")
-              .as("v6"))
-        val mom = ev.agg(count(lit(1)).as("ntot"),
-          sum($"v6".cast(d38)).as("s1"),
-          sum(($"v6".cast(d38)) * ($"v6".cast(d38))).as("s2"))
-          .select($"ntot",
-            expr("round((CAST(s2 AS DOUBLE) / 1e12 - " +
-              "CAST(s1 AS DOUBLE) / 1e6 * CAST(s1 AS DOUBLE) / 1e6 /" +
-              " CAST(ntot AS DOUBLE)) / CAST(ntot - 1 AS DOUBLE), 9)")
-              .as("g"))
-        val daily = ev.groupBy($"day", $"arm")
-          .agg(count(lit(1)).as("dn"), sum($"v6").as("ds"))
-        val wArm = Window.partitionBy($"arm").orderBy($"day")
-        val cum = daily
-          .withColumn("cn", sum($"dn").over(wArm))
-          .withColumn("cs", sum($"ds").over(wArm))
-        val c0 = cum.filter($"arm" === 0L)
-          .select($"day", $"cn".as("nc"), $"cs".as("sc6"))
-        val c1 = cum.filter($"arm" === 1L)
-          .select($"day", $"cn".as("nt"), $"cs".as("st6"))
-        c0.join(c1, "day")
-          .crossJoin(broadcast(mom))
-          .select($"day", $"nc", $"nt",
-            expr(s"CAST(round($obfZE * 1000000.0, 0) AS BIGINT)")
-              .as("z_micro"),
-            expr(s"CAST(round($obfBoundE * 1000000.0, 0) AS BIGINT)")
-              .as("bound_micro"))
-          .withColumn("significant",
-            abs($"z_micro") > $"bound_micro")
-          .orderBy($"day")
-      },
-      Some(s"""WITH ev AS (
+    "q_obrien_fleming" -> GQuery.sql(
+      s"""WITH ev AS (
         |  SELECT CAST(ts AS DATE) AS day, user_id % 2 AS arm,
         |    CAST(round(value * 1000000.0, 0) AS BIGINT) AS v6
         |  FROM events WHERE value IS NOT NULL),
@@ -1647,7 +1351,7 @@ object Inference {
         |JOIN (SELECT day, cn, cs AS st6 FROM cum WHERE arm = 1) c1
         |  USING (day), mom,
         |  LATERAL (SELECT c0.cn AS nc, c1.cn AS nt) nn
-        |ORDER BY c0.day""".stripMargin),
+        |ORDER BY c0.day""".stripMargin,
       "O'Brien-Fleming-shaped group-sequential A/B boundary: per-day " +
         "cumulative z vs 1.96/sqrt(information fraction) (exact " +
         "integer battery, frozen pooled variance)"),
@@ -1700,53 +1404,8 @@ object Inference {
     // stated). Detrending is EXACT integer arithmetic at 7x scale
     // (7x - sum7); component values freeze to micro before the moment
     // sums. Everything runs on the calendar-bounded day table.
-    "q_stl_lite" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.load(s, d, "events")
-          .groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("x"))
-        val win = daily.as("a")
-          .join(daily.as("b"), $"b.day" >= date_sub($"a.day", 3) &&
-            $"b.day" <= date_add($"a.day", 3))
-          .groupBy($"a.day".as("day"), $"a.x".as("x"))
-          .agg(count(lit(1)).as("w"), sum($"b.x").as("s7"))
-          .filter($"w" === 7)
-          .select($"day", $"x", ($"x" * 7 - $"s7").as("det7"))
-        val seas = win.groupBy(dayofweek($"day").as("dow"))
-          .agg(expr("CAST(round(CAST(SUM(det7) AS DOUBLE) / " +
-            "CAST(COUNT(*) AS DOUBLE) / 7.0 * 1000000.0, 0) " +
-            "AS BIGINT)").as("s6"))
-        val parts = win.join(broadcast(seas),
-            dayofweek($"day") === $"dow")
-          .select($"x",
-            expr("CAST(round((CAST(x AS DOUBLE) - " +
-              "CAST(det7 AS DOUBLE) / 7.0) * 1000000.0, 0) AS BIGINT)")
-              .as("t6"),
-            $"s6",
-            expr("CAST(round(CAST(det7 AS DOUBLE) / 7.0 * 1000000.0," +
-              " 0) AS BIGINT) - s6").as("r6"))
-        parts.agg(count(lit(1)).as("n"),
-            sum($"x").as("sx"),
-            sum($"x".cast(d38) * $"x".cast(d38)).as("sxx"),
-            sum($"t6").as("st"),
-            sum($"t6".cast(d38) * $"t6".cast(d38)).as("stt"),
-            sum($"s6").as("ss"),
-            sum($"s6".cast(d38) * $"s6".cast(d38)).as("sss"),
-            sum($"r6").as("sr"),
-            sum($"r6".cast(d38) * $"r6".cast(d38)).as("srr"))
-          .select($"n".as("n_days_used"),
-            expr(s"CAST(round(${stlVarE("st", "stt", "1e12")} / " +
-              s"${stlVarE("sx", "sxx", "1.0")} * 1000000.0, 0) " +
-              "AS BIGINT)").as("trend_share_micro"),
-            expr(s"CAST(round(${stlVarE("ss", "sss", "1e12")} / " +
-              s"${stlVarE("sx", "sxx", "1.0")} * 1000000.0, 0) " +
-              "AS BIGINT)").as("seasonal_share_micro"),
-            expr(s"CAST(round(${stlVarE("sr", "srr", "1e12")} / " +
-              s"${stlVarE("sx", "sxx", "1.0")} * 1000000.0, 0) " +
-              "AS BIGINT)").as("resid_share_micro"))
-      },
-      Some(s"""WITH daily AS (
+    "q_stl_lite" -> GQuery.sql(
+      s"""WITH daily AS (
         |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
         |  FROM events GROUP BY 1),
         |win AS (
@@ -1794,7 +1453,7 @@ object Inference {
         |  CAST(round(${stlVarE("sr", "srr", "1e12")} /
         |    ${stlVarE("sx", "sxx", "1.0")} * 1000000.0, 0) AS BIGINT)
         |    AS resid_share_micro
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "classical-decomposition variance split of daily event counts " +
         "(exact 7x-scaled detrending, dow seasonal means, micro-" +
         "frozen components)"),
@@ -1888,33 +1547,8 @@ object Inference {
     // 4.5e-4 — stated; identical expression tree in both engines),
     // frozen at 9 dp so the correlation moments are exact decimals.
     // Rank window over the bounded day table.
-    "q_shapiro_francia" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val daily = Tables.load(s, d, "events")
-          .groupBy(to_date($"ts").as("day")).agg(count(lit(1)).as("x"))
-        val n1 = daily.agg(count(lit(1)).as("n"))
-        val ranked = daily.crossJoin(broadcast(n1))
-          .withColumn("i", row_number().over(
-            Window.orderBy($"x".asc, $"day".asc)))
-          .select($"x", $"n",
-            expr("(CAST(i AS DOUBLE) - 0.375) / " +
-              "(CAST(n AS DOUBLE) + 0.25)").as("p"))
-          .select($"x", $"n",
-            expr(s"CAST(round(${probitE("p")}, 9) AS DECIMAL(14,9))")
-              .as("m9"))
-        ranked.groupBy($"n")
-          .agg(sum($"x").as("sx"),
-            sum($"x".cast(d38) * $"x".cast(d38)).as("sxx"),
-            sum($"m9").as("sm"),
-            sum($"m9" * $"m9").as("smm"),
-            sum($"x".cast(d38) * $"m9").as("sxm"))
-          .select($"n".as("n_days"),
-            expr(s"CAST(round($sfW2E * 1000000.0, 0) AS BIGINT)")
-              .as("wprime_micro"))
-      },
-      Some(s"""WITH daily AS (
+    "q_shapiro_francia" -> GQuery.sql(
+      s"""WITH daily AS (
         |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS x
         |  FROM events GROUP BY 1),
         |n1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM daily),
@@ -1937,7 +1571,7 @@ object Inference {
         |SELECT n AS n_days,
         |  CAST(round($sfW2E * 1000000.0, 0) AS BIGINT)
         |    AS wprime_micro
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "Shapiro-Francia W' normality statistic (Blom scores via the " +
         "A&S 26.2.23 probit, 9-dp frozen, exact correlation moments)"),
 
@@ -2583,31 +2217,8 @@ object Inference {
     // freeze at 9 dp into exact decimal sums, so the only double math
     // is the one-row exp/ln readout, identical IEEE ops in both
     // engines. One corpus rollup + a nation-bounded reduce.
-    "q_atkinson" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val cust = Tables.load(s, d, "orders")
-          .groupBy($"o_custkey")
-          .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-            .as("x"))
-          .join(Tables.load(s, d, "customer")
-            .select($"c_custkey", $"c_nationkey"),
-            $"o_custkey" === $"c_custkey")
-          .select($"c_nationkey",  $"x",
-            expr("CAST(round(ln(CAST(x AS DOUBLE)), 9) " +
-              "AS DECIMAL(16,9))").as("l9"))
-        cust.groupBy($"c_nationkey")
-          .agg(count(lit(1)).as("n_cust"),
-            sum($"x").as("sum_cents"), sum($"l9").as("sl"))
-          .join(Tables.load(s, d, "nation")
-            .select($"n_nationkey", $"n_name"),
-            $"c_nationkey" === $"n_nationkey")
-          .select($"n_name", $"n_cust", $"sum_cents",
-            expr(s"CAST(round($atkinsonE * 1000000.0, 0) AS BIGINT)")
-              .as("atkinson_micro"))
-          .orderBy($"n_name")
-      },
-      Some(s"""WITH cust AS (
+    "q_atkinson" -> GQuery.sql(
+      s"""WITH cust AS (
         |  SELECT c_nationkey,
         |    CAST(round(ln(CAST(x AS DOUBLE)), 9) AS DECIMAL(16,9))
         |      AS l9, x
@@ -2625,7 +2236,7 @@ object Inference {
         |  CAST(round($atkinsonE * 1000000.0, 0) AS BIGINT)
         |    AS atkinson_micro
         |FROM bn JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY n_name""".stripMargin),
+        |ORDER BY n_name""".stripMargin,
       "Atkinson(1) inequality of customer revenue per nation (9-dp " +
         "frozen ln terms, geometric/arithmetic mean ratio)"),
 
@@ -2642,61 +2253,8 @@ object Inference {
     // user_id parity, outcome = purchase value, strata = per-user
     // event count (the q_stratified_ate battery); per-stratum weighted
     // terms freeze at 9 dp into exact decimal sums.
-    "q_ipw" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val u = Tables.load(s, d, "events")
-          .groupBy($"user_id")
-          .agg(count(lit(1)).as("score"),
-            coalesce(sum(when($"event_type" === "purchase",
-              expr("CAST(round(value * 1000000.0, 0) AS BIGINT)"))),
-              lit(0L)).as("y6"),
-            pmod(first($"user_id"), lit(2L)).as("arm"))
-        val strat = u.groupBy($"score")
-          .agg(sum(when($"arm" === 0L, 1L).otherwise(0L)).as("nc"),
-            sum(when($"arm" === 0L, $"y6").otherwise(0L)).as("syc"),
-            sum(when($"arm" === 1L, 1L).otherwise(0L)).as("nt"),
-            sum(when($"arm" === 1L, $"y6").otherwise(0L)).as("syt"))
-        strat
-          .select($"nc", $"syc", $"nt", $"syt",
-            expr(s"CASE WHEN $ipwRawE < 0.1 OR $ipwRawE > 0.9 " +
-              "THEN 1L ELSE 0L END").as("clipped"),
-            expr(s"CAST(round(CAST(syt AS DOUBLE) / $ipwEE - " +
-              s"CAST(syc AS DOUBLE) / (1.0 - $ipwEE), 9) " +
-              "AS DECIMAL(28,9))").as("ht9"),
-            expr(s"CAST(round(CAST(nt AS DOUBLE) / $ipwEE, 9) " +
-              "AS DECIMAL(28,9))").as("wt9"),
-            expr(s"CAST(round(CAST(nc AS DOUBLE) / (1.0 - $ipwEE), " +
-              "9) AS DECIMAL(28,9))").as("wc9"),
-            expr(s"CAST(round(CAST(syt AS DOUBLE) / $ipwEE, 9) " +
-              "AS DECIMAL(28,9))").as("st9"),
-            expr(s"CAST(round(CAST(syc AS DOUBLE) / (1.0 - $ipwEE), " +
-              "9) AS DECIMAL(28,9))").as("sc9"),
-            expr(s"CAST(round(CAST(nt AS DOUBLE) / ($ipwEE * " +
-              s"$ipwEE), 9) AS DECIMAL(28,9))").as("wt2_9"))
-          .agg(sum($"nc" + $"nt").as("n_users"),
-            count(lit(1)).as("n_strata"),
-            sum($"clipped").as("n_clipped_strata"),
-            sum($"ht9").as("sht"), sum($"wt9").as("swt"),
-            sum($"wc9").as("swc"), sum($"st9").as("sst"),
-            sum($"sc9").as("ssc"), sum($"wt2_9").as("swt2"))
-          .select($"n_users", $"n_strata", $"n_clipped_strata",
-            expr("CASE WHEN n_users = 0 THEN CAST(NULL AS BIGINT) " +
-              "ELSE CAST(round(CAST(sht AS DOUBLE) / " +
-              "CAST(n_users AS DOUBLE), 0) AS BIGINT) END")
-              .as("ipw_ate_micro"),
-            expr("CASE WHEN swt = 0 OR swc = 0 " +
-              "THEN CAST(NULL AS BIGINT) " +
-              "ELSE CAST(round(CAST(sst AS DOUBLE) / " +
-              "CAST(swt AS DOUBLE) - CAST(ssc AS DOUBLE) / " +
-              "CAST(swc AS DOUBLE), 0) AS BIGINT) END")
-              .as("hajek_ate_micro"),
-            expr("CASE WHEN swt2 = 0 THEN CAST(NULL AS BIGINT) " +
-              "ELSE CAST(round(CAST(swt AS DOUBLE) * " +
-              "CAST(swt AS DOUBLE) / CAST(swt2 AS DOUBLE) * " +
-              "1000000.0, 0) AS BIGINT) END").as("ess_t_micro"))
-      },
-      Some(s"""WITH u AS (
+    "q_ipw" -> GQuery.sql(
+      s"""WITH u AS (
         |  SELECT user_id, user_id % 2 AS arm,
         |    CAST(COUNT(*) AS BIGINT) AS score,
         |    CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase' THEN
@@ -2753,7 +2311,7 @@ object Inference {
         |    ELSE CAST(round(CAST(swt AS DOUBLE) * CAST(swt AS DOUBLE)
         |      / CAST(swt2 AS DOUBLE) * 1000000.0, 0) AS BIGINT) END
         |    AS ess_t_micro
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "IPW treatment effect with [0.1, 0.9] overlap clipping: " +
         "Horvitz-Thompson + Hajek estimates and treated-weight " +
         "effective sample size (9-dp frozen per-stratum terms)"),
@@ -2862,23 +2420,8 @@ object Inference {
     // whose only transcendental is sqrt (correctly rounded IEEE, so no
     // 9-dp freeze is needed). Scale: one category-keyed partial-agg
     // shuffle at any corpus size; NO 1-row barrier at all.
-    "q_wilson_ci" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        Tables.load(s, d, "events")
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("n"),
-            sum($"value".isNotNull.cast("long")).as("k"))
-          .select($"event_type", $"n", $"k",
-            expr("CAST(round(CAST(k AS DOUBLE) / CAST(n AS DOUBLE) " +
-              "* 1000000.0, 0) AS BIGINT)").as("p_micro"),
-            expr(s"CAST(round($wilsonCtrE - $wilsonHwE, 0) AS BIGINT)")
-              .as("lo_micro"),
-            expr(s"CAST(round($wilsonCtrE + $wilsonHwE, 0) AS BIGINT)")
-              .as("hi_micro"))
-          .orderBy($"event_type")
-      },
-      Some(s"""WITH g AS (
+    "q_wilson_ci" -> GQuery.sql(
+      s"""WITH g AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CASE WHEN value IS NOT NULL THEN 1 ELSE 0 END)
         |      AS BIGINT) AS k
@@ -2888,7 +2431,7 @@ object Inference {
         |    * 1000000.0, 0) AS BIGINT) AS p_micro,
         |  CAST(round($wilsonCtrE - $wilsonHwE, 0) AS BIGINT) AS lo_micro,
         |  CAST(round($wilsonCtrE + $wilsonHwE, 0) AS BIGINT) AS hi_micro
-        |FROM g ORDER BY event_type""".stripMargin),
+        |FROM g ORDER BY event_type""".stripMargin,
       "Wilson 95% score intervals for per-event-type conversion " +
         "(exact k/n cells, closed form, sqrt-only transcendentals)"),
 
@@ -2907,45 +2450,8 @@ object Inference {
     // one custkey-keyed partial agg (the corpus shuffle), a customer-
     // grain join, one scalar reduce; the bandwidth filter prunes
     // before the join-side agg consumes anything.
-    "q_rdd" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val oc = Tables.load(s, d, "orders")
-          .groupBy($"o_custkey")
-          .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-            .as("yc"))
-        val pan = Tables.load(s, d, "customer")
-          .select($"c_custkey",
-            expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)").as("xc"))
-          .filter(abs($"xc") <= 100000L)
-          .join(oc, $"c_custkey" === $"o_custkey", "left")
-          .select($"xc", coalesce($"yc", lit(0L)).as("yc"),
-            ($"xc" >= 0L).as("r"))
-        def side(p: String, cond: org.apache.spark.sql.Column) = Seq(
-          sum(when(cond, 1L).otherwise(0L)).as(s"n$p"),
-          sum(when(cond, $"xc".cast(d38))).as(s"sx$p"),
-          sum(when(cond, $"yc".cast(d38))).as(s"sy$p"),
-          sum(when(cond, $"xc".cast(d19) * $"xc".cast(d19)))
-            .as(s"sxx$p"),
-          sum(when(cond, $"xc".cast(d19) * $"yc".cast(d19)))
-            .as(s"sxy$p"))
-        val moments = side("l", !$"r") ++ side("r", $"r")
-        pan.agg(moments.head, moments.tail: _*)
-          .select($"nl".as("n_left"), $"nr".as("n_right"),
-            expr(s"CASE WHEN ${rddGuardE("l")} THEN CAST(NULL AS " +
-              s"BIGINT) ELSE CAST(round(${rddB1E("l")} * 1000000.0, " +
-              "0) AS BIGINT) END").as("slope_l_micro"),
-            expr(s"CASE WHEN ${rddGuardE("r")} THEN CAST(NULL AS " +
-              s"BIGINT) ELSE CAST(round(${rddB1E("r")} * 1000000.0, " +
-              "0) AS BIGINT) END").as("slope_r_micro"),
-            expr(s"CASE WHEN ${rddGuardE("l")} OR ${rddGuardE("r")} " +
-              s"THEN CAST(NULL AS BIGINT) ELSE CAST(round(" +
-              s"${rddB0E("r")} - ${rddB0E("l")}, 0) AS BIGINT) END")
-              .as("effect_cents"))
-      },
-      Some(s"""WITH oc AS (
+    "q_rdd" -> GQuery.sql(
+      s"""WITH oc AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
         |      AS BIGINT) AS yc
@@ -2988,7 +2494,7 @@ object Inference {
         |    THEN CAST(NULL AS BIGINT)
         |    ELSE CAST(round(${rddB0E("r")} - ${rddB0E("l")}, 0)
         |      AS BIGINT) END AS effect_cents
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "sharp regression discontinuity at the zero-balance cutoff " +
         "(per-side local OLS from one conditional moment battery)"),
 
@@ -3052,36 +2558,8 @@ object Inference {
     // 1-row reduction of exact integers/decimals; every output is a
     // fixed IEEE expression over them. Degenerate cov(z,x) = 0 emits
     // NULL via CASE (the q_rdd contract).
-    "q_iv_2sls" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
-        val u = Tables.load(s, d, "events")
-          .groupBy($"user_id")
-          .agg(count(lit(1)).as("x"),
-            coalesce(sum(when($"event_type" === "purchase",
-              expr("CAST(round(value * 1000000.0, 0) AS BIGINT)"))),
-              lit(0L)).as("y"))
-          .select(pmod($"user_id", lit(2L)).as("z"), $"x", $"y")
-        u.agg(count(lit(1)).as("n"), sum($"z").as("sz"),
-            sum($"x").as("sx"), sum($"y").as("sy"),
-            sum($"z" * $"x").as("szx"),
-            sum(($"z" * $"y").cast(d19)).as("szy"),
-            sum($"x".cast(d19) * $"x".cast(d19)).as("sxx"),
-            sum($"x".cast(d19) * $"y".cast(d19)).as("sxy"))
-          .select($"n",
-            expr(s"CASE WHEN $ivCzxE = 0.0 THEN CAST(NULL AS BIGINT) " +
-              s"ELSE CAST(round($ivCzyE / $ivCzxE, 0) AS BIGINT) END")
-              .as("beta_iv_micro"),
-            expr(s"CASE WHEN $ivCxxE = 0.0 THEN CAST(NULL AS BIGINT) " +
-              s"ELSE CAST(round($ivCxyE / $ivCxxE, 0) AS BIGINT) END")
-              .as("beta_ols_micro"),
-            expr(s"CASE WHEN $ivCzzE = 0.0 OR $ivCxxE = 0.0 OR " +
-              s"1.0 - $ivR2E = 0.0 THEN CAST(NULL AS BIGINT) " +
-              s"ELSE CAST(round($ivFstageE * 1000000.0, 0) AS BIGINT) " +
-              "END").as("first_stage_f_micro"))
-      },
-      Some(s"""WITH u AS (
+    "q_iv_2sls" -> GQuery.sql(
+      s"""WITH u AS (
         |  SELECT user_id % 2 AS z, CAST(COUNT(*) AS BIGINT) AS x,
         |    CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase' THEN
         |      CAST(round(value * 1000000.0, 0) AS BIGINT) END), 0)
@@ -3109,7 +2587,7 @@ object Inference {
         |    1.0 - $ivR2E = 0.0 THEN CAST(NULL AS BIGINT)
         |    ELSE CAST(round($ivFstageE * 1000000.0, 0) AS BIGINT) END
         |    AS first_stage_f_micro
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "instrumental-variables 2SLS (Wald ratio) with the naive OLS " +
         "contrast and the first-stage weak-instrument F — one " +
         "conditional moment battery"),
@@ -3300,45 +2778,8 @@ object Inference {
     // pooled β rides along from the same battery to quantify the
     // confounding the FE absorb. One groupBy(nation) shuffle, one
     // ~25-row reduce; nothing corpus-global.
-    "q_fwl_within" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val d19 = org.apache.spark.sql.types.DecimalType(19, 0)
-        val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-        val oc = Tables.load(s, d, "orders")
-          .groupBy($"o_custkey")
-          .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-            .as("yc"))
-        val g = Tables.load(s, d, "customer")
-          .select($"c_custkey", $"c_nationkey",
-            expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)").as("dc"))
-          .join(oc, $"c_custkey" === $"o_custkey", "left")
-          .select($"c_nationkey",
-            $"dc", coalesce($"yc", lit(0L)).as("yc"))
-          .groupBy($"c_nationkey")
-          .agg(count(lit(1)).as("ng"),
-            sum($"dc".cast(d38)).as("sd"),
-            sum($"yc".cast(d38)).as("sy"),
-            sum($"dc".cast(d19) * $"dc".cast(d19)).as("sdd"),
-            sum($"dc".cast(d19) * $"yc".cast(d19)).as("sdy"))
-        g.agg(sum($"ng").as("n"),
-          count(lit(1)).as("n_groups"),
-          sum(expr(s"CAST(round($fwlNumTermE, 0) AS DECIMAL(38,0))"))
-            .as("wnum"),
-          sum(expr(s"CAST(round($fwlDenTermE, 0) AS DECIMAL(38,0))"))
-            .as("wden"),
-          sum($"sd").as("tsd"), sum($"sy").as("tsy"),
-          sum($"sdd").as("tsdd"), sum($"sdy").as("tsdy"))
-          .selectExpr("n", "n_groups",
-            "CASE WHEN CAST(wden AS DOUBLE) <= 0.0 THEN " +
-              "CAST(NULL AS BIGINT) ELSE CAST(round(" +
-              "CAST(wnum AS DOUBLE) / CAST(wden AS DOUBLE) * " +
-              "1000000.0, 0) AS BIGINT) END AS beta_within_micro",
-            s"CASE WHEN $fwlPoolDenE <= 0.0 THEN CAST(NULL AS BIGINT)" +
-              s" ELSE CAST(round($fwlPoolBetaE * 1000000.0, 0) " +
-              "AS BIGINT) END AS beta_pooled_micro")
-      },
-      Some(s"""WITH oc AS (
+    "q_fwl_within" -> GQuery.sql(
+      s"""WITH oc AS (
         |  SELECT o_custkey,
         |    CAST(SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT))
         |      AS BIGINT) AS yc
@@ -3375,7 +2816,7 @@ object Inference {
         |  CASE WHEN $fwlPoolDenE <= 0.0 THEN CAST(NULL AS BIGINT)
         |    ELSE CAST(round($fwlPoolBetaE * 1000000.0, 0) AS BIGINT)
         |    END AS beta_pooled_micro
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "FWL partialling-out / nation-fixed-effects within estimator " +
         "with the pooled slope for confounding contrast (exact " +
         "decimal batteries, frozen per-group terms)"),
@@ -3395,47 +2836,8 @@ object Inference {
     // group's a²/n frozen to nano. Exactly two single-partition
     // exchanges: the grid window and the 1-row readout. Degenerate
     // margins (every value on one side) emit NULL.
-    "q_mood_median" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val g2 = Tables.load(s, d, "events")
-          .filter($"value".isNotNull)
-          .select($"event_type",
-            expr("CAST(round(value * 100, 0) AS BIGINT)").as("v"))
-          .groupBy($"event_type", $"v")
-          .agg(count(lit(1)).as("cnt"))
-        val wCum = org.apache.spark.sql.expressions.Window
-          .orderBy($"v")
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)
-        val wAll = org.apache.spark.sql.expressions.Window
-          .orderBy($"v")
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding,
-            org.apache.spark.sql.expressions.Window
-              .unboundedFollowing)
-        val flags = g2.groupBy($"v").agg(sum($"cnt").as("cv"))
-          .withColumn("cum", sum($"cv").over(wCum))
-          .withColumn("ntot", sum($"cv").over(wAll))
-          .select($"v", (($"cum" - $"cv") * 2L >= $"ntot").as("abv"))
-        g2.join(flags, "v")
-          .groupBy($"event_type")
-          .agg(sum(when($"abv", $"cnt").otherwise(0L)).as("a"),
-            sum(when(!$"abv", $"cnt").otherwise(0L)).as("b"))
-          .select($"a", $"b",
-            expr(s"CAST(round($moodS9E * 1000000000.0, 0) AS BIGINT)")
-              .as("s9"))
-          .agg(count(lit(1)).as("k"), sum($"a").as("ta"),
-            sum($"b").as("tb"), sum($"s9").as("ss9"))
-          .selectExpr("k", "ta + tb AS n",
-            s"CASE WHEN ta = 0 OR tb = 0 THEN CAST(NULL AS BIGINT) " +
-              s"ELSE CAST(round($moodChi2E * 1000000.0, 0) AS BIGINT)" +
-              " END AS chi2_micro")
-          .selectExpr("k", "n", "chi2_micro",
-            "CASE WHEN chi2_micro IS NULL THEN CAST(NULL AS BOOLEAN) " +
-              "ELSE chi2_micro > 9487729 END AS reject_05")
-      },
-      Some(s"""WITH g2 AS (
+    "q_mood_median" -> GQuery.sql(
+      s"""WITH g2 AS (
         |  SELECT event_type, CAST(round(value * 100, 0) AS BIGINT)
         |    AS v, CAST(COUNT(*) AS BIGINT) AS cnt
         |  FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
@@ -3471,7 +2873,7 @@ object Inference {
         |SELECT k, n, chi2_micro,
         |  CASE WHEN chi2_micro IS NULL THEN CAST(NULL AS BOOLEAN)
         |    ELSE chi2_micro > 9487729 END AS reject_05
-        |FROM o""".stripMargin),
+        |FROM o""".stripMargin,
       "Mood's median test across event types (exact grid median, " +
         "frozen per-type χ² terms)"),
 
@@ -3485,42 +2887,8 @@ object Inference {
     // variance uses micro-frozen per-type variances over an exact
     // integer-weighted sum. Any type with n < 2 or zero variance
     // NULLs the readout.
-    "q_bartlett" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val dd = Fns.D18_6
-        val g = Tables.load(s, d, "events")
-          .filter($"value".isNotNull)
-          .select($"event_type", $"value".cast(dd).as("v"))
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("ng"), sum($"v").as("sg"),
-            sum($"v" * $"v").as("qg"))
-          .select($"ng",
-            expr(s"CASE WHEN ng < 2 OR $bartS2E <= 0.0 THEN NULL " +
-              s"ELSE CAST(round($bartS2E * 1000000.0, 0) AS BIGINT) " +
-              "END").as("s2mic"),
-            expr(s"CASE WHEN ng < 2 OR $bartS2E <= 0.0 THEN NULL " +
-              s"ELSE CAST(round(ln($bartS2E), 9) AS DECIMAL(12,9)) " +
-              "END").as("ln9"),
-            expr("CASE WHEN ng < 2 THEN NULL ELSE " +
-              "CAST(round(1.0 / CAST(ng - 1 AS DOUBLE), 12) AS " +
-              "DECIMAL(14,12)) END").as("inv12"))
-        g.agg(count(lit(1)).as("k"), sum($"ng").as("n"),
-          sum(($"ng" - 1L) * $"s2mic").as("ws2"),
-          sum(($"ng" - 1L).cast("decimal(19,0)") * $"ln9").as("wln"),
-          sum($"inv12").as("sinv"),
-          sum(when($"s2mic".isNull, 1L).otherwise(0L)).as("bad"))
-          .selectExpr("k", "n",
-            s"CASE WHEN bad > 0 OR k < 2 OR n <= k THEN " +
-              s"CAST(NULL AS BIGINT) ELSE " +
-              s"CAST(round($bartTE * 1000000.0, 0) AS BIGINT) END " +
-              "AS bartlett_micro")
-          .selectExpr("k", "n", "bartlett_micro",
-            "CASE WHEN bartlett_micro IS NULL THEN CAST(NULL AS " +
-              "BOOLEAN) ELSE bartlett_micro > 9487729 END " +
-              "AS reject_05")
-      },
-      Some(s"""WITH g0 AS (
+    "q_bartlett" -> GQuery.sql(
+      s"""WITH g0 AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS ng,
         |    SUM(CAST(value AS DECIMAL(18,6))) AS sg,
         |    SUM(CAST(value AS DECIMAL(18,6)) *
@@ -3557,7 +2925,7 @@ object Inference {
         |SELECT k, n, bartlett_micro,
         |  CASE WHEN bartlett_micro IS NULL THEN CAST(NULL AS BOOLEAN)
         |    ELSE bartlett_micro > 9487729 END AS reject_05
-        |FROM o""".stripMargin),
+        |FROM o""".stripMargin,
       "Bartlett variance-homogeneity test across event types (frozen " +
         "per-type ln-variances, exact weighted sums)"),
 
@@ -3714,30 +3082,8 @@ object Inference {
     // size n0 uses the exact Σn², and the final ratio is one shared
     // expression. Degenerate designs (k < 2 or zero within variance)
     // emit NULL.
-    "q_icc" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val dd = Fns.D18_6
-        val g = Tables.load(s, d, "events")
-          .filter($"value".isNotNull)
-          .select($"event_type", $"value".cast(dd).as("v"))
-          .groupBy($"event_type")
-          .agg(count(lit(1)).as("ng"), sum($"v").as("sg"),
-            sum($"v" * $"v").as("qg"))
-          .select($"ng", $"sg", $"qg",
-            expr("CAST(round(CAST(sg AS DOUBLE) * " +
-              "CAST(sg AS DOUBLE) / CAST(ng AS DOUBLE), 6) AS " +
-              "DECIMAL(30,6))").as("s2n"))
-        g.agg(count(lit(1)).as("k"), sum($"ng").as("n"),
-          sum($"sg").as("ts"), sum($"qg").as("tq"),
-          sum($"s2n").as("ts2n"),
-          sum($"ng" * $"ng").as("tn2"))
-          .selectExpr("k", "n",
-            s"CASE WHEN $iccGuardE THEN CAST(NULL AS BIGINT) ELSE " +
-              s"CAST(round($iccE * 1000000.0, 0) AS BIGINT) END " +
-              "AS icc_micro")
-      },
-      Some(s"""WITH g0 AS (
+    "q_icc" -> GQuery.sql(
+      s"""WITH g0 AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS ng,
         |    SUM(CAST(value AS DECIMAL(18,6))) AS sg,
         |    SUM(CAST(value AS DECIMAL(18,6)) *
@@ -3758,7 +3104,7 @@ object Inference {
         |  CASE WHEN $iccGuardE THEN CAST(NULL AS BIGINT) ELSE
         |    CAST(round($iccE * 1000000.0, 0) AS BIGINT) END
         |    AS icc_micro
-        |FROM m""".stripMargin),
+        |FROM m""".stripMargin,
       "intraclass correlation ICC(1) of values within event types " +
         "(exact ANOVA batteries, frozen per-group terms)"),
   )

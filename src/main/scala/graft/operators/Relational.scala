@@ -131,30 +131,16 @@ object Relational {
       "projection pushdown (R/star_transformer.R:85-89)"),
 
     // P3 equality filter (README.md:252-253; R/main.R:153-154)
-    "q_filter_eq" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "orders")
-          .filter($"o_orderstatus" === "F")
-          .select($"o_orderkey", $"o_custkey", $"o_totalprice")
-          .orderBy($"o_orderkey")
-      },
-      Some("""SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders WHERE o_orderstatus = 'F' ORDER BY o_orderkey""".stripMargin),
+    "q_filter_eq" -> GQuery.sql(
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders WHERE o_orderstatus = 'F' ORDER BY o_orderkey""".stripMargin,
       "equality predicate filter (README.md:252-253)"),
 
     // P2 not-null filter (R/star_transformer.R:53)
-    "q_filter_notnull" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "events")
-          .filter($"value".isNotNull && $"event_type".isNotNull)
-          .select($"event_id", $"user_id", $"value")
-          .orderBy($"event_id")
-      },
-      Some("""SELECT event_id, user_id, value FROM events
+    "q_filter_notnull" -> GQuery.sql(
+      """SELECT event_id, user_id, value FROM events
         |WHERE value IS NOT NULL AND event_type IS NOT NULL
-        |ORDER BY event_id""".stripMargin),
+        |ORDER BY event_id""".stripMargin,
       "not-null filter before dimension build (R/star_transformer.R:53)"),
 
     // P4/F1 numeric promotion with silent null (R/star_transformer.R:93-97):
@@ -180,20 +166,10 @@ object Relational {
       "as.numeric silent-NA promotion (R/star_transformer.R:93-97)"),
 
     // F6 concat with separator (R/xml_parser.R:189; R/schema_analyzer.R:18)
-    "q_concat" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "customer")
-          .select(
-            $"c_custkey",
-            concat_ws("|", $"c_name", $"c_mktsegment").as("name_seg"),
-            upper($"c_name").as("name_upper"),
-            lower($"c_mktsegment").as("seg_lower"))
-          .orderBy($"c_custkey")
-      },
-      Some("""SELECT c_custkey, concat_ws('|', c_name, c_mktsegment) AS name_seg,
+    "q_concat" -> GQuery.sql(
+      """SELECT c_custkey, concat_ws('|', c_name, c_mktsegment) AS name_seg,
         |  upper(c_name) AS name_upper, lower(c_mktsegment) AS seg_lower
-        |FROM customer ORDER BY c_custkey""".stripMargin),
+        |FROM customer ORDER BY c_custkey""".stripMargin,
       "paste(collapse=...) concat (R/xml_parser.R:189)"),
 
     // S6/F4 comment business-key regex: pattern ^([A-Za-z]+):([^:]+)$
@@ -319,51 +295,27 @@ object Relational {
 
     // F-tier math scalars: engine-identical IEEE double + integer math.
     // round() is decimal-exact half-away-from-zero on both engines.
-    "q_math_funcs" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "lineitem")
-          .select($"l_orderkey", $"l_linenumber",
-            abs($"l_discount" - 0.05).as("abs_d"),
-            ceil($"l_quantity" / 7).as("ceil_q"),
-            floor($"l_extendedprice" / 1000).as("floor_p"),
-            round($"l_tax" * 100, 1).as("round_t"),
-            pow($"l_quantity", 2).as("q_sq"),
-            pmod($"l_orderkey", lit(97)).as("mod_k"))
-          .orderBy($"l_orderkey", $"l_linenumber")
-      },
-      Some("""SELECT l_orderkey, l_linenumber,
+    "q_math_funcs" -> GQuery.sql(
+      """SELECT l_orderkey, l_linenumber,
         |  abs(l_discount - 0.05) AS abs_d,
         |  CAST(ceil(l_quantity / 7) AS BIGINT) AS ceil_q,
         |  CAST(floor(l_extendedprice / 1000) AS BIGINT) AS floor_p,
         |  round(l_tax * 100, 1) AS round_t,
         |  pow(l_quantity, 2) AS q_sq,
         |  l_orderkey % 97 AS mod_k
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
       "math scalar functions (abs/ceil/floor/round/pow/mod)"),
 
     // F-tier string scalars beyond the reference's trim/concat tier.
-    "q_string_funcs" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "part")
-          .select($"p_partkey",
-            lpad($"p_name", 30, ".").as("padded"),
-            reverse($"p_name").as("rev"),
-            substring($"p_name", 2, 5).as("mid"),
-            instr($"p_name", "a").cast("int").as("first_a"),
-            repeat(substring($"p_name", 1, 2), 3).as("rep2"),
-            translate($"p_name", "aeiou", "AEIOU").as("caps_vowels"))
-          .orderBy($"p_partkey")
-      },
-      Some("""SELECT p_partkey,
+    "q_string_funcs" -> GQuery.sql(
+      """SELECT p_partkey,
         |  lpad(p_name, 30, '.') AS padded,
         |  reverse(p_name) AS rev,
         |  substring(p_name, 2, 5) AS mid,
         |  CAST(instr(p_name, 'a') AS INT) AS first_a,
         |  repeat(left(p_name, 2), 3) AS rep2,
         |  translate(p_name, 'aeiou', 'AEIOU') AS caps_vowels
-        |FROM part ORDER BY p_partkey""".stripMargin),
+        |FROM part ORDER BY p_partkey""".stripMargin,
       "string scalar functions (pad/reverse/substr/instr/repeat/translate)"),
 
     // F8+ date ARITHMETIC (the reading tier is q_date_funcs): day offsets,
@@ -412,17 +364,11 @@ object Relational {
     // U1+ union DISTINCT (q_union_by_name covers union-all-with-fill;
     // q_set_ops covers intersect/except): distinct nation keys present on
     // either side — dedup happens via one partial-aggregable distinct.
-    "q_union_distinct" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val a = t(s, d, "customer").select($"c_nationkey".as("nk"))
-        val b = t(s, d, "supplier").select($"s_nationkey".cast("bigint").as("nk"))
-        a.union(b).distinct().orderBy($"nk")
-      },
-      Some("""SELECT CAST(c_nationkey AS BIGINT) AS nk FROM customer
+    "q_union_distinct" -> GQuery.sql(
+      """SELECT CAST(c_nationkey AS BIGINT) AS nk FROM customer
         |UNION
         |SELECT CAST(s_nationkey AS BIGINT) AS nk FROM supplier
-        |ORDER BY nk""".stripMargin),
+        |ORDER BY nk""".stripMargin,
       "union distinct (set union across tables)"),
 
     // F8 date/time functions (R/star_transformer.R:112-114; R/logger.R:11,31)
@@ -469,21 +415,11 @@ object Relational {
     // the reference's signature move (R/star_transformer.R:51-61). The
     // global window is safe ONLY because dims are tiny post-distinct
     // (classifier caps them at <50 values, R/schema_analyzer.R:34).
-    "q_dim_build" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "customer")
-          .select($"c_mktsegment").filter($"c_mktsegment".isNotNull)
-          .distinct()
-          .withColumn("segment_key",
-            row_number().over(Window.orderBy($"c_mktsegment")))
-          .select($"segment_key", $"c_mktsegment", lit(true).as("is_active"))
-          .orderBy($"segment_key")
-      },
-      Some("""SELECT CAST(row_number() OVER (ORDER BY c_mktsegment) AS INT) AS segment_key,
+    "q_dim_build" -> GQuery.sql(
+      """SELECT CAST(row_number() OVER (ORDER BY c_mktsegment) AS INT) AS segment_key,
         |  c_mktsegment, TRUE AS is_active
         |FROM (SELECT DISTINCT c_mktsegment FROM customer WHERE c_mktsegment IS NOT NULL)
-        |ORDER BY segment_key""".stripMargin),
+        |ORDER BY segment_key""".stripMargin,
       "surrogate-key dimension build (R/star_transformer.R:51-61)"),
 
     // J1 fact-to-dimension key attach, collapsed to one broadcast equi-join
@@ -567,25 +503,8 @@ object Relational {
     // ~4/5 of customers BEFORE the o_custkey shuffle join; the l/o join
     // shuffles on orderkey; TakeOrderedAndProject replaces a global
     // sort for the top-10.
-    "q_tpch_q3" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val cut = lit("1996-06-30").cast("timestamp")
-        t(s, d, "customer").filter($"c_mktsegment" === "BUILDING")
-          .select($"c_custkey")
-          .join(t(s, d, "orders").filter($"o_orderdate" < cut),
-            $"c_custkey" === $"o_custkey")
-          .join(t(s, d, "lineitem").filter($"l_shipdate" > cut),
-            $"o_orderkey" === $"l_orderkey")
-          .groupBy($"l_orderkey", $"o_orderdate", $"o_orderpriority")
-          .agg(sum($"l_extendedprice".cast(D18_2) *
-            (lit(1.0) - $"l_discount").cast(D18_8)).as("rev"))
-          .orderBy($"rev".desc, $"l_orderkey")
-          .limit(10)
-          .select($"l_orderkey", $"rev".cast("double").as("revenue"),
-            $"o_orderdate", $"o_orderpriority")
-      },
-      Some("""SELECT l_orderkey,
+    "q_tpch_q3" -> GQuery.sql(
+      """SELECT l_orderkey,
         |  CAST(rev AS DOUBLE) AS revenue, o_orderdate, o_orderpriority
         |FROM (
         |  SELECT l_orderkey, o_orderdate, o_orderpriority,
@@ -598,7 +517,7 @@ object Relational {
         |    AND o_orderdate < TIMESTAMP '1996-06-30 00:00:00'
         |    AND l_shipdate > TIMESTAMP '1996-06-30 00:00:00'
         |  GROUP BY l_orderkey, o_orderdate, o_orderpriority)
-        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin),
+        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
       "TPC-H Q3 shipping-priority (selective dim filter, two fact " +
         "joins, exact-decimal top-10)"),
 
@@ -1593,23 +1512,8 @@ object Relational {
     // Extension X7: TPC-H-Q3-shaped top-k revenue — join + agg + top-k in
     // one plan; AQE broadcasts the filtered customer side, and the final
     // top-10 is TakeOrderedAndProject over the aggregate (no global sort).
-    "q_topk_agg" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "lineitem")
-          .join(t(s, d, "orders"), $"l_orderkey" === $"o_orderkey")
-          .join(t(s, d, "customer"), $"o_custkey" === $"c_custkey")
-          .filter($"c_mktsegment" === "BUILDING" &&
-            $"o_orderdate" < lit("1997-01-01").cast("timestamp") &&
-            $"l_shipdate" > lit("1997-01-01").cast("timestamp"))
-          .groupBy($"l_orderkey", $"o_orderdate")
-          .agg(sum($"l_extendedprice".cast(D18_2) *
-            (lit(1.0) - $"l_discount").cast(D18_8))
-            .cast("double").as("revenue"))
-          .orderBy($"revenue".desc, $"l_orderkey")
-          .limit(10)
-      },
-      Some("""SELECT l_orderkey, o_orderdate,
+    "q_topk_agg" -> GQuery.sql(
+      """SELECT l_orderkey, o_orderdate,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,8))) AS DOUBLE) AS revenue
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
@@ -1618,90 +1522,47 @@ object Relational {
         |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
         |  AND l_shipdate > TIMESTAMP '1997-01-01 00:00:00'
         |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
       "TPC-H-Q3-shaped top-k revenue (extension X7)"),
 
     // Semi join (EXISTS) — free in Catalyst, absent in reference (§2.3).
-    "q_semi_join" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val open = t(s, d, "orders").filter($"o_orderstatus" === "O")
-        t(s, d, "customer")
-          .join(open, $"c_custkey" === $"o_custkey", "left_semi")
-          .select($"c_custkey", $"c_name")
-          .orderBy($"c_custkey")
-      },
-      Some("""SELECT c_custkey, c_name FROM customer c
+    "q_semi_join" -> GQuery.sql(
+      """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'O')
-        |ORDER BY c_custkey""".stripMargin),
+        |ORDER BY c_custkey""".stripMargin,
       "left-semi join / EXISTS (extension)"),
 
     // Anti join (NOT EXISTS) — used for FK-integrity checks in the star
     // builder (SURVEY.md §5 item 4).
-    "q_anti_join" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "customer")
-          .join(t(s, d, "orders"), $"c_custkey" === $"o_custkey", "left_anti")
-          .select($"c_custkey", $"c_name")
-          .orderBy($"c_custkey")
-      },
-      Some("""SELECT c_custkey, c_name FROM customer c
+    "q_anti_join" -> GQuery.sql(
+      """SELECT c_custkey, c_name FROM customer c
         |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |ORDER BY c_custkey""".stripMargin),
+        |ORDER BY c_custkey""".stripMargin,
       "left-anti join / NOT EXISTS (extension)"),
 
     // A4 distinct counts (R/schema_analyzer.R:15). Exact here; the 100 TB
     // path swaps in approx_count_distinct (HLL) — see SchemaProfiler.
-    "q_count_distinct" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "lineitem").agg(
-          countDistinct($"l_partkey").as("n_parts"),
-          countDistinct($"l_suppkey").as("n_supps"),
-          countDistinct($"l_orderkey").as("n_orders"),
-          count(lit(1)).as("n_rows"))
-      },
-      Some("""SELECT COUNT(DISTINCT l_partkey) AS n_parts,
+    "q_count_distinct" -> GQuery.sql(
+      """SELECT COUNT(DISTINCT l_partkey) AS n_parts,
         |  COUNT(DISTINCT l_suppkey) AS n_supps,
         |  COUNT(DISTINCT l_orderkey) AS n_orders,
-        |  COUNT(*) AS n_rows FROM lineitem""".stripMargin),
+        |  COUNT(*) AS n_rows FROM lineitem""".stripMargin,
       "n_distinct profiling (R/schema_analyzer.R:15)"),
 
     // A7 verdict counts + percentage (R/schema_validator.R:201-204)
-    "q_group_count" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "orders")
-          .groupBy($"o_orderpriority")
-          .agg(count(lit(1)).as("n"))
-          .withColumn("pct",
-            $"n".cast("double") /
-              sum($"n").over(Window.partitionBy()).cast("double"))
-          .orderBy($"o_orderpriority")
-      },
-      Some("""SELECT o_orderpriority, COUNT(*) AS n,
+    "q_group_count" -> GQuery.sql(
+      """SELECT o_orderpriority, COUNT(*) AS n,
         |  CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE) AS pct
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
       "group count + percentage (R/schema_validator.R:201-204)"),
 
     // W1 ranked-first-N per key: row_number over a real partition.
-    "q_window_rownum" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val w = Window.partitionBy($"o_custkey")
-          .orderBy($"o_orderdate", $"o_orderkey")
-        t(s, d, "orders")
-          .withColumn("rn", row_number().over(w))
-          .filter($"rn" <= 2)
-          .select($"o_custkey", $"o_orderkey", $"rn")
-          .orderBy($"o_custkey", $"rn")
-      },
-      Some("""SELECT o_custkey, o_orderkey, rn FROM (
+    "q_window_rownum" -> GQuery.sql(
+      """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey,
         |    CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS INT) AS rn
-        |  FROM orders) WHERE rn <= 2 ORDER BY o_custkey, rn""".stripMargin),
+        |  FROM orders) WHERE rn <= 2 ORDER BY o_custkey, rn""".stripMargin,
       "row_number per partition (R/star_transformer.R:56-61 generalized)"),
 
     // Extension X7: rank analytics (top-3 priced lines per supplier).
@@ -1726,35 +1587,18 @@ object Relational {
     // Running (cumulative) sum with an explicit row frame. Decimal inside
     // the frame so the incremental vs tree-aggregated evaluation of the two
     // engines cannot diverge.
-    "q_window_running" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        val w = Window.partitionBy($"o_custkey")
-          .orderBy($"o_orderdate", $"o_orderkey")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        t(s, d, "orders")
-          .withColumn("running_total",
-            sum($"o_totalprice".cast(D18_2)).over(w).cast("double"))
-          .select($"o_custkey", $"o_orderkey", $"running_total")
-          .orderBy($"o_custkey", $"o_orderkey")
-      },
-      Some("""SELECT o_custkey, o_orderkey,
+    "q_window_running" -> GQuery.sql(
+      """SELECT o_custkey, o_orderkey,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
         |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
-        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+        |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
       "running sum frame (extension)"),
 
     // O1 sort (R/star_transformer.R:56; README.md:268)
-    "q_sort" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "customer")
-          .select($"c_custkey", $"c_name", $"c_acctbal")
-          .orderBy($"c_acctbal".desc, $"c_custkey")
-      },
-      Some("""SELECT c_custkey, c_name, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey""".stripMargin),
+    "q_sort" -> GQuery.sql(
+      """SELECT c_custkey, c_name, c_acctbal FROM customer
+        |ORDER BY c_acctbal DESC, c_custkey""".stripMargin,
       "arrange/sort (README.md:268)"),
 
     // O2 top-k: Catalyst plans TakeOrderedAndProject (no full sort at scale).
@@ -1793,16 +1637,9 @@ object Relational {
       "rbindlist(fill=TRUE) union (R/main.R:156)"),
 
     // A2 row dedup (R/parquet_writer.R:115-116) — distinct as set semantics.
-    "q_dedup" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "lineitem")
-          .select($"l_returnflag", $"l_linestatus")
-          .distinct()
-          .orderBy($"l_returnflag", $"l_linestatus")
-      },
-      Some("""SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q_dedup" -> GQuery.sql(
+      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
       "unique() dedup (R/parquet_writer.R:115-116)"),
 
     // R1 wide->long reshape (R/schema_analyzer.R:6-24) as unpivot.
@@ -1828,52 +1665,28 @@ object Relational {
     // (SURVEY.md §2.4): one Expand-based aggregation, no multi-pass.
     // Null sort order made explicit on both engines (Spark defaults nulls
     // first, DuckDB nulls last).
-    "q_rollup" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "orders")
-          .rollup($"o_orderpriority", $"o_orderstatus")
-          .agg(count(lit(1)).as("n"), dsum2($"o_totalprice").as("total"))
-          .orderBy($"o_orderpriority".asc_nulls_first,
-            $"o_orderstatus".asc_nulls_first)
-      },
-      Some(s"""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
+    "q_rollup" -> GQuery.sql(
+      s"""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
         |  ${sqlDsum2("o_totalprice")} AS total
         |FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-        |ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin),
+        |ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin,
       "rollup subtotals (SURVEY.md §2.4 extension)"),
 
     // SQL entry point (spark.sql) + GROUPING SETS — only SQL-expressible in
     // Spark; demonstrates the engine's SQL surface alongside the DataFrame
     // API. Same one-pass Expand aggregation as rollup/cube.
-    "q_grouping_sets" -> GQuery(
-      (s, d) => {
-        Tables.load(s, d, "orders").createOrReplaceTempView("orders_v")
-        s.sql("""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
-          |FROM orders_v
-          |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus))
-          |ORDER BY o_orderpriority ASC NULLS FIRST,
-          |         o_orderstatus ASC NULLS FIRST""".stripMargin)
-      },
-      Some("""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
+    "q_grouping_sets" -> GQuery.sql(
+      """SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus))
-        |ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin),
+        |ORDER BY o_orderpriority NULLS FIRST, o_orderstatus NULLS FIRST""".stripMargin,
       "spark.sql GROUPING SETS (SURVEY.md §2.4 extension)"),
 
-    "q_cube" -> GQuery(
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "lineitem")
-          .cube($"l_returnflag", $"l_linestatus")
-          .agg(count(lit(1)).as("n"), dsum2($"l_quantity").as("qty"))
-          .orderBy($"l_returnflag".asc_nulls_first,
-            $"l_linestatus".asc_nulls_first)
-      },
-      Some(s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
+    "q_cube" -> GQuery.sql(
+      s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |  ${sqlDsum2("l_quantity")} AS qty
         |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
       "cube aggregation (SURVEY.md §2.4 extension)"),
 
     // R1 long->wide: groupBy().pivot() with an explicit value list (required

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * correlated EXISTS / NOT EXISTS, correlated LATERAL subqueries, date-spine
   * generation, exact higher-moment statistics, and map-typed aggregation.
   *
-  * These run through `spark.sql` over registered views — deliberately: they
-  * exercise Catalyst's subquery machinery (RewritePredicateSubquery turns
+  * The SQL ones run their text on Spark through [[GQuery.run]]'s per-call
+  * table binding (no session views) — deliberately: they exercise
+  * Catalyst's subquery machinery (RewritePredicateSubquery turns
   * EXISTS/NOT EXISTS into semi/anti hash joins; DecorrelateInnerQuery turns
   * the per-row LATERAL limit into a ranked window — both verified in
   * PlanSpec), which the DataFrame-API operators elsewhere don't touch. The
@@ -19,75 +20,29 @@ import org.apache.spark.sql.functions._
   */
 object SqlShapes {
 
-  /** Shared verbatim by Spark and DuckDB: integer sums are exact on both
-    * (BIGINT / HUGEINT), the double formula is identical. */
-  private val momentsSql =
-    """WITH s AS (
-      |  SELECT l_returnflag, COUNT(*) AS n,
-      |    SUM(CAST(l_quantity AS BIGINT)) AS s1,
-      |    SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS s2,
-      |    SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
-      |      * CAST(l_quantity AS BIGINT)) AS s3,
-      |    SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
-      |      * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS s4
-      |  FROM lineitem GROUP BY l_returnflag),
-      |m AS (
-      |  SELECT l_returnflag, n,
-      |    CAST(s1 AS DOUBLE) / n AS m1, CAST(s2 AS DOUBLE) / n AS m2,
-      |    CAST(s3 AS DOUBLE) / n AS m3, CAST(s4 AS DOUBLE) / n AS m4
-      |  FROM s)
-      |SELECT l_returnflag, n, m1 AS mean,
-      |  (m2 - m1 * m1) AS variance,
-      |  (m3 - 3 * m1 * m2 + 2 * m1 * m1 * m1)
-      |    / power(m2 - m1 * m1, 1.5) AS skewness,
-      |  (m4 - 4 * m1 * m3 + 6 * m1 * m1 * m2 - 3 * m1 * m1 * m1 * m1)
-      |    / power(m2 - m1 * m1, 2) - 3 AS kurtosis_excess
-      |FROM m ORDER BY l_returnflag""".stripMargin
-
-  private def views(s: SparkSession, d: String, names: String*): Unit =
-    names.foreach(n => Tables.load(s, d, n).createOrReplaceTempView(n))
-
   val queries: Seq[(String, GQuery)] = Seq(
 
     // Correlated EXISTS + NOT EXISTS — planned as one semi join and one
     // anti join on o_custkey (shuffle on the key, no per-row probing).
-    "q_exists_subquery" -> GQuery(
-      (s, d) => {
-        views(s, d, "customer", "orders")
-        s.sql("""SELECT c_custkey, c_name, c_acctbal FROM customer c
-          |WHERE EXISTS (SELECT 1 FROM orders o
-          |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
-          |  AND NOT EXISTS (SELECT 1 FROM orders o2
-          |    WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F')
-          |ORDER BY c_custkey""".stripMargin)
-      },
-      Some("""SELECT c_custkey, c_name, c_acctbal FROM customer c
+    "q_exists_subquery" -> GQuery.sql(
+      """SELECT c_custkey, c_name, c_acctbal FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |    WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000)
         |  AND NOT EXISTS (SELECT 1 FROM orders o2
         |    WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin),
+        |ORDER BY c_custkey""".stripMargin,
       "correlated EXISTS/NOT EXISTS → semi + anti join"),
 
     // Correlated LATERAL with per-row ORDER BY/LIMIT — top-2 orders per
     // customer. Catalyst decorrelates to a partitioned rank window, so the
     // per-customer limit costs one shuffle, not |customers| subqueries.
-    "q_lateral_topk" -> GQuery(
-      (s, d) => {
-        views(s, d, "customer", "orders")
-        s.sql("""SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-          |FROM customer c, LATERAL (
-          |  SELECT o_orderkey, o_totalprice FROM orders o
-          |  WHERE o.o_custkey = c.c_custkey
-          |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-          |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)
-      },
-      Some("""SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
+    "q_lateral_topk" -> GQuery.sql(
+      """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer c, LATERAL (
         |  SELECT o_orderkey, o_totalprice FROM orders o
         |  WHERE o.o_custkey = c.c_custkey
         |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
-        |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin),
+        |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin,
       "correlated LATERAL top-k per key"),
 
     // Date-spine generation with zero-fill — the calendar-dimension pattern
@@ -95,9 +50,7 @@ object SqlShapes {
     // spine is sequence() over the min/max bounds: O(#months) rows from a
     // 2-row aggregate, never a driver-side loop.
     "q_date_spine" -> GQuery(
-      (s, d) => {
-        views(s, d, "orders")
-        s.sql("""WITH b AS (
+      (s, d) => GQuery.run(s, d, """WITH b AS (
           |  SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) lo,
           |         CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) hi
           |  FROM orders),
@@ -110,8 +63,7 @@ object SqlShapes {
           |  FROM orders GROUP BY 1)
           |SELECT s.month_start, COALESCE(m.n, 0) AS n_orders
           |FROM spine s LEFT JOIN m ON s.month_start = m.month_start
-          |ORDER BY s.month_start""".stripMargin)
-      },
+          |ORDER BY s.month_start""".stripMargin),
       Some("""WITH b AS (
         |  SELECT CAST(date_trunc('month', MIN(o_orderdate)) AS DATE) lo,
         |         CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) hi
@@ -135,12 +87,28 @@ object SqlShapes {
     // skewness()/kurtosis() stream doubles and are order-sensitive; this
     // formulation is the deterministic scale-out version: one partial-agg
     // shuffle of 5 numbers per group.
-    "q_skew_moments" -> GQuery(
-      (s, d) => {
-        views(s, d, "lineitem")
-        s.sql(momentsSql)
-      },
-      Some(momentsSql),
+    "q_skew_moments" -> GQuery.sql(
+      """WITH s AS (
+        |  SELECT l_returnflag, COUNT(*) AS n,
+        |    SUM(CAST(l_quantity AS BIGINT)) AS s1,
+        |    SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS s2,
+        |    SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
+        |      * CAST(l_quantity AS BIGINT)) AS s3,
+        |    SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)
+        |      * CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS s4
+        |  FROM lineitem GROUP BY l_returnflag),
+        |m AS (
+        |  SELECT l_returnflag, n,
+        |    CAST(s1 AS DOUBLE) / n AS m1, CAST(s2 AS DOUBLE) / n AS m2,
+        |    CAST(s3 AS DOUBLE) / n AS m3, CAST(s4 AS DOUBLE) / n AS m4
+        |  FROM s)
+        |SELECT l_returnflag, n, m1 AS mean,
+        |  (m2 - m1 * m1) AS variance,
+        |  (m3 - 3 * m1 * m2 + 2 * m1 * m1 * m1)
+        |    / power(m2 - m1 * m1, 1.5) AS skewness,
+        |  (m4 - 4 * m1 * m3 + 6 * m1 * m1 * m2 - 3 * m1 * m1 * m1 * m1)
+        |    / power(m2 - m1 * m1, 2) - 3 AS kurtosis_excess
+        |FROM m ORDER BY l_returnflag""".stripMargin,
       "exact higher moments (skewness, kurtosis) via integer power sums"),
 
     // Map-typed aggregation: per source, lang → doc-count as a map column,
