@@ -22,14 +22,15 @@ import org.apache.spark.sql.functions._
 object Inference {
 
   /** Per-user conversion panel shared by the 2x2 queries: one row per
-    * (arm, user), conv = user fired >= 1 'purchase' event. Arm is the
-    * house A/B assignment (treated = odd user_id). One user-keyed
+    * (arm, user), conv = user fired >= 1 'purchase' event, else 0 (a
+    * NULL `event_type` is not a purchase, as in the oracle's CASE). Arm
+    * is the house A/B assignment (treated = odd user_id). One user-keyed
     * partial agg — the only corpus shuffle these queries do. */
   private def userConv(s: SparkSession, d: String) = {
     import s.implicits._
     Tables.load(s, d, "events")
       .select(pmod($"user_id", lit(2L)).as("arm"), $"user_id",
-        ($"event_type" === "purchase").cast("long").as("p"))
+        when($"event_type" === "purchase", 1L).otherwise(0L).as("p"))
       .groupBy($"arm", $"user_id").agg(max($"p").as("conv"))
   }
 
@@ -3373,7 +3374,8 @@ object Inference {
 
   /** q_negbin_fit's readout over an `(event_type, user_id, x BIGINT)`
     * per-user count table: zeros-included moments via the distinct-
-    * user denominator, dispersion index, NB size. Public because
+    * user denominator (non-null ids only, as the oracle's
+    * `COUNT(DISTINCT user_id)`), dispersion index, NB size. Public because
     * [[graft.streaming.DispersionStream]] answers the SAME readout
     * from its merged user-grain partials — one expression tree, two
     * tiers (the conformalReadout pattern), so the documented
@@ -3383,7 +3385,7 @@ object Inference {
     import counts.sparkSession.implicits._
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val nu = counts.select($"user_id").distinct()
-      .agg(count(lit(1)).as("nu"))
+      .agg(count($"user_id").as("nu"))
     counts.groupBy($"event_type")
       .agg(sum($"x").as("sx"),
         sum($"x".cast(d38) * $"x".cast(d38)).as("sxx"))

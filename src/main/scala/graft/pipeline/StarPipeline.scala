@@ -66,8 +66,9 @@ object StarPipeline {
       ("record_id" -> "identifier")
 
     val star0 = StarTransformer.build(data, "record_id", roles, runId, loadTs)
-    val star = StarSchema(star0.fact.cache(),
-      star0.dims.map { case (n, d) => n -> d.cache() })
+    // the dims are driver-local (StarTransformer.buildDims): not cached,
+    // so the integrity check reads their keys without a job
+    val star = star0.copy(fact = star0.fact.cache())
 
     val factPath = s"$outputDir/fact_main.parquet"
     star.fact.write.mode(SaveMode.Overwrite)

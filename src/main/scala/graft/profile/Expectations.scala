@@ -199,40 +199,15 @@ object Expectations {
     require(!expectations.exists(_.isInstanceOf[Unique]),
       "Unique needs countDistinct, which observe() cannot collect — " +
         "run Unique contracts through check()")
-    val cols = expectations.flatMap(metricCols)
-      .zipWithIndex.map { case (c, i) => c.as(s"m$i") }
-    val obs = org.apache.spark.sql.Observation()
-    val instrumented = df.observe(obs, cols.head, cols.tail: _*)
+    val (instrumented, values) = observedValues(df,
+      expectations.flatMap(metricCols), timeoutSec)
     val rows = () => {
-      // bounded wait: Observation.get blocks FOREVER when no action has
-      // run over the instrumented frame (and its non-blocking readers
-      // are private[sql]) — wait on a disposable daemon thread and fail
-      // with a usable message instead of hanging the caller
-      val row = {
-        val holder = new java.util.concurrent
-          .ArrayBlockingQueue[Map[String, Any]](1)
-        val waiter = new Thread(() => {
-          try holder.put(obs.get)
-          catch { case _: InterruptedException => }
-        })
-        waiter.setDaemon(true)
-        waiter.start()
-        val m = holder.poll(timeoutSec,
-          java.util.concurrent.TimeUnit.SECONDS)
-        if (m == null) {
-          waiter.interrupt()
-          throw new IllegalStateException(
-            s"no observed metrics after ${timeoutSec}s — run an action " +
-              "(write/count) over the INSTRUMENTED DataFrame before " +
-              "reading the report")
-        }
-        m
-      }
+      val row = values()
       var idx = 0
       expectations.map { e =>
         val n = metricCols(e).size
         val ms = (0 until n).map { j =>
-          val v = row.get(s"m${idx + j}").orNull
+          val v = row(idx + j)
           if (v == null) Double.NaN else v.asInstanceOf[Double]
         }
         idx += n
@@ -241,5 +216,43 @@ object Expectations {
       }
     }
     (instrumented, rows)
+  }
+
+  /** The mechanism under [[observedRows]], for any aggregate columns:
+    * `df` instrumented with `metrics` via `observe()`, and a reader of
+    * their values in `metrics` order. The values are collected by
+    * accumulators during the first action over the instrumented frame;
+    * the reader waits for that action, bounded by `timeoutSec`. Several
+    * observations may ride one action (each call makes its own). */
+  def observedValues(df: DataFrame, metrics: Seq[Column],
+      timeoutSec: Long = 60L): (DataFrame, () => Seq[Any]) = {
+    require(metrics.nonEmpty, "no metrics to observe")
+    val named = metrics.zipWithIndex.map { case (c, i) => c.as(s"m$i") }
+    val obs = org.apache.spark.sql.Observation()
+    val instrumented = df.observe(obs, named.head, named.tail: _*)
+    val values = () => {
+      // bounded wait: Observation.get blocks FOREVER when no action has
+      // run over the instrumented frame (and its non-blocking readers
+      // are private[sql]) — wait on a disposable daemon thread and fail
+      // with a usable message instead of hanging the caller
+      val holder = new java.util.concurrent
+        .ArrayBlockingQueue[Map[String, Any]](1)
+      val waiter = new Thread(() => {
+        try holder.put(obs.get)
+        catch { case _: InterruptedException => }
+      })
+      waiter.setDaemon(true)
+      waiter.start()
+      val m = holder.poll(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
+      if (m == null) {
+        waiter.interrupt()
+        throw new IllegalStateException(
+          s"no observed metrics after ${timeoutSec}s — run an action " +
+            "(write/count) over the INSTRUMENTED DataFrame before " +
+            "reading the report")
+      }
+      metrics.indices.map(i => m.get(s"m$i").orNull)
+    }
+    (instrumented, values)
   }
 }

@@ -100,39 +100,44 @@ object SchemaProfiler {
   }
 
   /** 100 TB variant: HLL distinct counts (configurable error) instead of an
-    * exact count-distinct per column; otherwise identical shape. Role
-    * thresholds tolerate HLL error by construction (they compare against
-    * ratios, not exact cardinalities). Default rsd 0.05: tightening to
-    * 0.02 pushes the sketch past its dense-representation threshold and
-    * costs ~6x per-row update time (measured) for precision the
-    * classifier never uses. */
+    * exact count-distinct per column; otherwise the same output columns,
+    * one row per column, in no set order (an empty input gives no rows).
+    * Role thresholds tolerate HLL error by construction (they compare
+    * against ratios, not exact cardinalities). Default rsd 0.05:
+    * tightening to 0.02 pushes the sketch past its dense-representation
+    * threshold and costs ~6x per-row update time (measured) for precision
+    * the classifier never uses.
+    *
+    * Plan shape (deliberate): LONG form — unpivot to (col_name, value)
+    * with `stack`, then one `groupBy(col_name)` aggregate with the five
+    * metrics. `approx_count_distinct` is an imperative aggregate, so its
+    * aggregate falls back from whole-stage codegen; in the wide form (one
+    * global aggregate with five metrics per column) every task then
+    * regenerates projections over a buffer of ~5 fields per column plus
+    * every column's HLL registers. Grouped by column, the buffer holds one
+    * column's metrics, whatever the column count. The estimates are the
+    * same: an HLL++ sketch merges register-wise whatever the grouping, so
+    * a column's sketch sees the same values either way. */
   def profileApprox(df: DataFrame, cols: Seq[String], rsd: Double = 0.05)
       : DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +: cols.flatMap { c =>
-      val sc = graft.qcol(c).cast("string")
-      Seq(
-        ((count(lit(1)) - count(sc)).cast("double") / count(lit(1)))
-          .as(s"${c}__null_ratio"),
-        (count(expr(s"try_cast(cast(`$c` AS string) AS double)"))
-          .cast("double") / when(count(sc) =!= 0, count(sc)))
-          .as(s"${c}__numeric_ratio"),
-        approx_count_distinct(sc, rsd).as(s"${c}__unique"),
-        (sum(length(sc)).cast("double") / when(count(sc) =!= 0, count(sc)))
-          .as(s"${c}__mean_len"))
-    }
-    val wide = df.agg(aggs.head, aggs.tail: _*)
-    val stackArgs = cols.map(c =>
-      s"'$c', `${c}__null_ratio`, `${c}__numeric_ratio`, `${c}__unique`, " +
-        s"`${c}__mean_len`").mkString(", ")
-    val long = wide.select(
-      col("n_rows"),
-      expr(s"stack(${cols.size}, $stackArgs) AS " +
-        "(col_name, null_ratio, numeric_ratio, unique_count, mean_length)"))
-    long.select(
-      col("col_name"), col("n_rows"), col("null_ratio"),
-      col("numeric_ratio"), col("unique_count"), col("mean_length"),
-      classify(col("col_name"), col("numeric_ratio"), col("unique_count"),
-        col("n_rows")).as("classification"),
-      logicalType(col("numeric_ratio"), col("mean_length")).as("data_type"))
+    val long = df.select(stack(lit(cols.size) +: cols.flatMap(c =>
+      Seq(lit(c), graft.qcol(c).cast("string"))): _*)
+      .as(Seq("col_name", "value")))
+    val v = col("value")
+    val nonNull = when(count(v) =!= 0, count(v))
+    long.groupBy("col_name").agg(
+      count(lit(1)).as("n_rows"),
+      ((count(lit(1)) - count(v)).cast("double") / count(lit(1)))
+        .as("null_ratio"),
+      (count(v.try_cast("double")).cast("double") / nonNull)
+        .as("numeric_ratio"),
+      approx_count_distinct(v, rsd).as("unique_count"),
+      (sum(length(v)).cast("double") / nonNull).as("mean_length"))
+      .select(
+        col("col_name"), col("n_rows"), col("null_ratio"),
+        col("numeric_ratio"), col("unique_count"), col("mean_length"),
+        classify(col("col_name"), col("numeric_ratio"), col("unique_count"),
+          col("n_rows")).as("classification"),
+        logicalType(col("numeric_ratio"), col("mean_length")).as("data_type"))
   }
 }

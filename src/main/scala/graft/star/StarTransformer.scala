@@ -5,7 +5,7 @@ import java.sql.{Date, Timestamp}
 import scala.jdk.CollectionConverters._
 
 import graft.qcol
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -187,39 +187,51 @@ object StarTransformer {
     * the fact first, then per dim (in `star.dims` order) empty, duplicate,
     * unresolved.
     *
-    * Three jobs whatever the dim count: one collect of every dim's keys
-    * (one row per dim row — dims are small by the classifier's contract),
-    * then one aggregate over the fact that counts its rows and,
-    * per dim, the non-null keys outside that dim's key set. Keys compare
-    * by their string form, exact for the integral keys dims carry; the key
-    * sets ride the plan as array literals, so the generated code is the
-    * same whatever the keys are. */
+    * The checks are defined once, in three parts: [[dimKeys]] reads each
+    * dim's keys, [[integrityMetrics]] are the fact-side counts, and the
+    * overload below turns those counts into verdicts. This form runs the
+    * metrics as one aggregate over the fact; a pipeline that writes the
+    * fact anyway observes them on its write instead (`XmlPipeline`), at no
+    * job of their own. */
   def validateIntegrity(star: StarSchema): Seq[String] = {
-    val dims = star.dims.toSeq
-    // one RDD union of per-dim plans, not a Dataset union: each dim keeps
-    // its own plan, so dims of one shape share one generated class
-    val keysByDim: Map[String, Seq[String]] =
-      if (dims.isEmpty) Map.empty
-      else star.fact.sparkSession.sparkContext.union(dims.map {
-        case (name, dim) =>
-          dim.select(qcol(s"${name}_key").cast("string")).rdd
-            .map(r => name -> r.getString(0))
-      }).collect().toSeq.groupMap(_._1)(_._2)
-    val checks = count(lit(1)) +: dims.map { case (name, _) =>
+    val keys = dimKeys(star.dims)
+    val checks = integrityMetrics(keys)
+    val counts = star.fact.agg(checks.head, checks.tail: _*).head()
+    validateIntegrity(keys, checks.indices.map(counts.getLong))
+  }
+
+  /** Each dim's surrogate keys by their string form, in `dims` order. No
+    * job for the driver-local dims [[buildDims]] and [[mergeDim]] return:
+    * the collect reads the rows the driver already holds. */
+  def dimKeys(dims: Map[String, DataFrame]): Seq[(String, Seq[String])] =
+    dims.toSeq.map { case (name, dim) =>
+      name -> dim.select(qcol(s"${name}_key").cast("string")).collect()
+        .toSeq.map(_.getString(0))
+    }
+
+  /** The integrity checks' fact-side aggregate columns: the fact's row
+    * count, then per dim the non-null fact keys outside that dim's key
+    * set. Keys compare by their string form, exact for the integral keys
+    * dims carry; the key sets ride the plan as array literals, so the
+    * generated code is the same whatever the keys are. */
+  def integrityMetrics(keys: Seq[(String, Seq[String])]): Seq[Column] =
+    count(lit(1)) +: keys.map { case (name, ks) =>
       val key = qcol(s"${name}_key")
-      val known = lit(keysByDim.getOrElse(name, Nil).filter(_ != null).toArray)
+      val known = lit(ks.filter(_ != null).toArray)
       count(when(key.isNotNull && !array_contains(known, key.cast("string")),
         lit(1)))
     }
-    val counts = star.fact.agg(checks.head, checks.tail: _*).head()
+
+  /** The verdicts of the integrity checks from their counts, in
+    * [[integrityMetrics]] order, and the keys they were built from. */
+  def validateIntegrity(keys: Seq[(String, Seq[String])], counts: Seq[Long])
+      : Seq[String] = {
     val violations = Seq.newBuilder[String]
-    if (counts.getLong(0) == 0) violations += "fact table is empty"
-    dims.zipWithIndex.foreach { case ((name, _), i) =>
-      val keys = keysByDim.getOrElse(name, Nil)
-      if (keys.isEmpty) violations += s"dimension $name is empty"
-      if (keys.distinct.size != keys.size)
+    if (counts.head == 0) violations += "fact table is empty"
+    keys.zip(counts.tail).foreach { case ((name, ks), unresolved) =>
+      if (ks.isEmpty) violations += s"dimension $name is empty"
+      if (ks.distinct.size != ks.size)
         violations += s"dimension $name has duplicate surrogate keys"
-      val unresolved = counts.getLong(i + 1)
       if (unresolved > 0)
         violations += s"$unresolved fact rows have unresolved ${name}_key"
     }

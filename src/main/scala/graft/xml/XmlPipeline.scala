@@ -21,12 +21,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * can. Per-file verdicts, profile rows and dim values are each collected
   * ONCE; the flattened data is cached once for the profile, dims and fact;
   * dims are keyed on the driver; the small reports are written from the
-  * driver; the parquet metadata comes from the footers. On the benchmark
-  * corpus (five dims; a dim adds two jobs, its broadcast and its write) a
-  * run is 26 jobs, and it needs few enough distinct generated classes (56)
-  * that a repeated run finds them all in Spark's codegen cache
+  * driver; the parquet metadata comes from the footers; the data contract
+  * and the star's integrity checks are observed on the fact write, so no
+  * job of their own reads the fact. On the benchmark corpus (five dims; a
+  * dim adds two jobs, its broadcast and its write) a run is 22 jobs, and
+  * it needs few enough distinct generated classes (54) that a repeated
+  * run finds them all in Spark's codegen cache
   * (`spark.sql.codegen.cache.maxEntries`, 100; Guava-backed, so misses
   * begin below that).
+  *
+  * Sink order: the dim writes and the driver-written reports that need
+  * nothing of the fact (errors, validation report, schema documentation)
+  * start before the fact write and run beside it; the contract verdicts,
+  * the manifest, the ledger and `parquet_metadata.csv` follow it. A run
+  * returns, or rethrows the first failure, only after every sink it
+  * started has finished.
   *
   * Outputs mirror the reference's layout (`R/parquet_writer.R`):
   * `fact_main.parquet`, `dim_<col>.parquet`, `processing_errors.csv`,
@@ -302,7 +311,6 @@ object XmlPipeline {
       .filterNot(_ == "record_id").filter(data.columns.contains)
     val fact = StarTransformer.buildFact(data, "record_id", measureCols,
       dims, Seq("source_file_name", "source_file_path"), runId, loadTs)
-      .cache()
     val star = StarSchema(fact, dims)
 
     // sinks (R/parquet_writer.R): snappy parquet, dictionary encoding on by
@@ -336,16 +344,91 @@ object XmlPipeline {
     // Some(Seq.empty) to disable, Some(exps) to override.
     val contractExps = factContract.getOrElse(
       defaultFactContract(measureCols.filter(factToWrite.columns.contains)))
-    val (factOut, contractRows) =
+    val (contracted, contractRows) =
       if (contractExps.isEmpty)
         (factToWrite, () => Seq.empty[(String, Double, Double, Boolean)])
       else graft.profile.Expectations.observedRows(factToWrite, contractExps)
+    // The integrity checks ride the same write as a second observation:
+    // their keys come from the driver-local dims (no job), their counts
+    // from the write's accumulators, so the fact is scanned once, by its
+    // write, and need not be cached.
+    val dimKeys = StarTransformer.dimKeys(dims)
+    val (factOut, integrityCounts) = graft.profile.Expectations
+      .observedValues(contracted, StarTransformer.integrityMetrics(dimKeys))
     // this run's fact rows are the rows of the part files its write adds
     val factFilesBefore =
       if (append) Reports.parquetFooters(conf, factPath).keySet
       else Set.empty[String]
-    factOut.write.mode(factMode)
-      .option("compression", "snappy").parquet(factPath)
+
+    // The dim writes and the driver-written reports that need nothing of
+    // the fact run BESIDE the fact write, each from its own future (a dim
+    // write is a tiny Spark job; the reports are a few rows each, not
+    // worth a Spark job apiece); `blocking` lets every one of them start
+    // at once, not queue for the pool's core-count threads. The manifest,
+    // the ledger and the metadata need the fact's footers, so they
+    // follow it.
+    import scala.concurrent.{blocking, Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.util.Try
+    val dimWrites = star.dims.toSeq.sortBy(_._1).map { case (name, dim) =>
+      val p = s"$outputDir/dim_$name.parquet"
+      // dims are tiny by the classifier contract -> one file
+      Future(blocking {
+        dim.coalesce(1).write.mode(SaveMode.Overwrite)
+          .option("compression", "snappy").parquet(p)
+        p
+      })
+    }
+    val reports = Future(blocking {
+      if (validate) {
+        val invalid = verdicts.filter(_.getAs[String]("verdict") == "invalid")
+        if (invalid.nonEmpty)
+          Reports.writeCsv(conf, s"$outputDir/processing_errors.csv",
+            Seq("file", "verdict", "errors", "schema_used"),
+            invalid.map(r => Seq("file", "verdict", "errors", "schema_used")
+              .map(r.getAs[String])))
+        // validation report (R/logger.R:125-156): verdict counts + share
+        // per run — the reference user's validation_report.csv
+        Reports.writeCsv(conf, s"$outputDir/validation_report.csv",
+          Seq("verdict", "n", "pct"),
+          verdicts.groupBy(_.getAs[String]("verdict")).toSeq
+            .sortBy { case (v, _) => utf8(v) }
+            .map { case (v, rs) =>
+              Seq(v, rs.size.toLong, rs.size.toDouble / verdicts.size) })
+      }
+      Reports.writeCsv(conf, s"$outputDir/schema_documentation.csv",
+        profiled.columns.toSeq,
+        profileRows.sortBy(r => (utf8(r.getAs[String]("classification")),
+          utf8(r.getAs[String]("col_name")))).map(_.toSeq))
+    })
+    val factWrite = Try {
+      factOut.write.mode(factMode)
+        .option("compression", "snappy").parquet(factPath)
+      // bucketed query-serving copy (full rebuilds only — see process())
+      bucketFact.foreach { case (table, key, buckets) =>
+        require(factToWrite.columns.contains(key),
+          s"bucketFact key '$key' not a fact column " +
+            s"(have: ${factToWrite.columns.mkString(", ")})")
+        graft.operators.Bucketed.writeBucketed(factToWrite, table, key,
+          buckets)
+        log.audit(s"wrote bucketed fact table $table (key=$key, n=$buckets)")
+      }
+    }
+    // every sink started above has finished before the run returns or
+    // fails; the first failure (in start order) is rethrown, the others
+    // ride it as suppressed
+    val dimDone = dimWrites.map(f => Try(Await.result(f, Duration.Inf)))
+    val reportsDone = Try(Await.result(reports, Duration.Inf))
+    (dimDone :+ reportsDone :+ factWrite).flatMap(_.failed.toOption) match {
+      case first +: rest =>
+        rest.foreach(first.addSuppressed)
+        data.unpersist()
+        throw first
+      case _ =>
+    }
+    val dimPaths = dimDone.map(_.get)
+
     // Verdicts come out of the write job's accumulators and land as a
     // DRIVER-SIDE csv — no follow-up Spark job touches the fact at all
     // (PipelineSpec pins the job count with and without the contract).
@@ -358,54 +441,9 @@ object XmlPipeline {
         log.error(s"fact contract FAILED: $e (metric=$m, threshold=$t)")
       }
     }
-    // bucketed query-serving copy (full rebuilds only — see process())
-    bucketFact.foreach { case (table, key, buckets) =>
-      require(factToWrite.columns.contains(key),
-        s"bucketFact key '$key' not a fact column " +
-          s"(have: ${factToWrite.columns.mkString(", ")})")
-      graft.operators.Bucketed.writeBucketed(factToWrite, table, key, buckets)
-      log.audit(s"wrote bucketed fact table $table (key=$key, n=$buckets)")
-    }
-    // The dim writes are SUBMITTED CONCURRENTLY (each is its own tiny
-    // Spark job; serially, task-launch latency dominates the stage). The
-    // small reports are written from the driver meanwhile (Reports): a
-    // few rows each, not worth a Spark job apiece.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val dimWrites = star.dims.toSeq.sortBy(_._1).map { case (name, dim) =>
-      val p = s"$outputDir/dim_$name.parquet"
-      // dims are tiny by the classifier contract -> one file
-      Future {
-        dim.coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy").parquet(p)
-        p
-      }
-    }
-    if (validate) {
-      val invalid = verdicts.filter(_.getAs[String]("verdict") == "invalid")
-      if (invalid.nonEmpty)
-        Reports.writeCsv(conf, s"$outputDir/processing_errors.csv",
-          Seq("file", "verdict", "errors", "schema_used"),
-          invalid.map(r => Seq("file", "verdict", "errors", "schema_used")
-            .map(r.getAs[String])))
-      // validation report (R/logger.R:125-156): verdict counts + share per
-      // run — the reference user's validation_report.csv
-      Reports.writeCsv(conf, s"$outputDir/validation_report.csv",
-        Seq("verdict", "n", "pct"),
-        verdicts.groupBy(_.getAs[String]("verdict")).toSeq
-          .sortBy { case (v, _) => utf8(v) }
-          .map { case (v, rs) =>
-            Seq(v, rs.size.toLong, rs.size.toDouble / verdicts.size) })
-    }
-    Reports.writeCsv(conf, s"$outputDir/schema_documentation.csv",
-      profiled.columns.toSeq,
-      profileRows.sortBy(r => (utf8(r.getAs[String]("classification")),
-        utf8(r.getAs[String]("col_name")))).map(_.toSeq))
 
     // manifest (append across runs, S13) + ledger + metadata from the
     // parquet footers (S14)
-    val dimPaths = dimWrites.map(Await.result(_, Duration.Inf))
     val factFooters = Reports.parquetFooters(conf, factPath)
     val rows = factFooters.collect {
       case (f, (n, _)) if !factFilesBefore(f) => n }.sum
@@ -438,8 +476,8 @@ object XmlPipeline {
     outputs.foreach(p => log.audit(s"wrote $p"))
     log.info(s"processed ${goodFiles.size}/${filesToProcess.size} files, " +
       s"$rows fact rows, batch_id=$runId")
-    val violations = StarTransformer.validateIntegrity(star)
-    fact.unpersist()
+    val violations = StarTransformer.validateIntegrity(dimKeys,
+      integrityCounts().map(_.asInstanceOf[Long]))
     data.unpersist()
     PipelineReport(filesDiscovered, nSkipped, rows, star, violations, outputs,
       contractVerdicts)

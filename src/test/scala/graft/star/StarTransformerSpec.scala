@@ -112,8 +112,22 @@ class StarTransformerSpec extends SparkSpec {
       .toDF("record_id", "category_key")
   private def verdicts(fact: org.apache.spark.sql.DataFrame,
       dim: org.apache.spark.sql.DataFrame): Seq[String] =
-    StarTransformer.validateIntegrity(
-      StarSchema(fact, Map("category" -> dim)))
+    bothWays(StarSchema(fact, Map("category" -> dim)))
+
+  // Every verdict below comes both ways and must agree: from the one
+  // aggregate, and from the same checks observed on a write of the fact,
+  // as XmlPipeline runs them (keys from the dims, counts from the write).
+  private def bothWays(star: StarSchema): Seq[String] = {
+    val viaAggregate = StarTransformer.validateIntegrity(star)
+    val keys = StarTransformer.dimKeys(star.dims)
+    val (fact, counts) = graft.profile.Expectations.observedValues(
+      star.fact, StarTransformer.integrityMetrics(keys))
+    fact.write.parquet(java.nio.file.Files
+      .createTempDirectory("graft_integrity").resolve("fact").toString)
+    assert(StarTransformer.validateIntegrity(keys,
+      counts().map(_.asInstanceOf[Long])) == viaAggregate)
+    viaAggregate
+  }
 
   test("integrity verdicts: a valid star has none") {
     assert(verdicts(factOf(Some(1), Some(2), Some(1)),
@@ -142,6 +156,7 @@ class StarTransformerSpec extends SparkSpec {
   }
 
   test("integrity verdicts: an empty fact") {
+    // the write still reports its (zero) counts, inside the bounded wait
     assert(verdicts(factOf(), dimOf(Some(1))) ==
       Seq("fact table is empty"))
   }
@@ -152,7 +167,7 @@ class StarTransformerSpec extends SparkSpec {
         .toDF("region_key", "region")))
     val fact = Seq(("1", Option(7), Option(2)))
       .toDF("record_id", "category_key", "region_key")
-    assert(StarTransformer.validateIntegrity(star.copy(fact = fact)) == Seq(
+    assert(bothWays(star.copy(fact = fact)) == Seq(
       "dimension category is empty",
       "1 fact rows have unresolved category_key",
       "dimension region has duplicate surrogate keys",

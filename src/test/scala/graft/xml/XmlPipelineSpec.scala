@@ -752,10 +752,34 @@ class XmlPipelineSpec extends SparkSpec {
     }
     once() // warmup: first-run-only costs
     val jobs = countJobs(once())
-    // 13 measured (the corpus has no dims): verdicts and profile rows are
+    // 10 measured (the corpus has no dims): verdicts and profile rows are
     // collected once, the reports are written from the driver, and the
-    // integrity check is 3 jobs
-    assert(jobs <= 15, s"$jobs Spark jobs for one run of the spec corpus")
+    // integrity checks ride the fact write, with no job of their own
+    assert(jobs <= 10, s"$jobs Spark jobs for one run of the spec corpus")
+  }
+
+  test("a failed dim write fails the run after every sink has finished") {
+    val in = Files.createTempDirectory("graft_sinkfail_in")
+    val out = Files.createTempDirectory("graft_sinkfail_out")
+    val schemas = Files.createTempDirectory("graft_sinkfail_sch")
+    Files.writeString(in.resolve("a.xml"),
+      catalogXml(1 to 40, Seq("active", "retired", "pending")))
+    // a regular file blocks dim_status.parquet: an overwrite would just
+    // replace a file AT that path, so the path is a link to a place under
+    // the file, where no directory can be made
+    val blocker = Files.writeString(out.resolve("blocker"), "a file")
+    Files.createSymbolicLink(out.resolve("dim_status.parquet"),
+      blocker.resolve("dim"))
+    val e = intercept[Exception] {
+      XmlPipeline.process(spark, in.toString, out.toString,
+        schemas.toString, runId = 14L, loadTs = ts)
+    }
+    assert(e.getMessage.contains("dim_status.parquet"), e.getMessage)
+    // no job the run started is still running once it has thrown
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    // the fact write, started beside the dim writes, completed
+    assert(Files.exists(out.resolve("fact_main.parquet/_SUCCESS")))
   }
 
   test("driver-written reports read back as Spark's CSV sink wrote them") {
